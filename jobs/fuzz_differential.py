@@ -82,14 +82,23 @@ def fuzz_geo(spark, rng, trial):
                       "qlon": qxy[:, 0], "qlat": qxy[:, 1]})
     )
     d = np.sqrt(((qxy[:, None, :] - xy[None, :, :]) ** 2).sum(-1))
+    # alternate the entry point: the one-shot joins and GeoIndex's methods
+    # reach the same shared second phase through different builders
+    via_index = bool(rng.integers(0, 2))
     cfg = dict(op="geo", n=n, nq=nq, flavor=flavor, k=k, level=level,
-               mcr=mcr, use_radius=use_radius)
+               mcr=mcr, use_radius=use_radius, via_index=via_index)
+    index = (
+        engine.GeoIndex(spark, img, level=level, max_cell_rows=mcr, n_images_hint=n)
+        if via_index else None
+    )
     if use_radius:
         r = float(rng.uniform(0.1, 40))
         cfg["r"] = r
-        got = engine.radius_join(
-            spark, img, q, r=r, level=level, max_cell_rows=mcr,
-            n_images_hint=n,
+        got = (
+            index.radius_join(q, r) if via_index else engine.radius_join(
+                spark, img, q, r=r, level=level, max_cell_rows=mcr,
+                n_images_hint=n,
+            )
         ).toPandas()
         qi = got.query_id.str.slice(1).astype(int).to_numpy()
         ii = got.image_id.str.slice(1).astype(int).to_numpy()
@@ -100,9 +109,11 @@ def fuzz_geo(spark, rng, trial):
     else:
         mr = float(rng.uniform(0.5, 50)) if rng.integers(0, 2) else float("inf")
         cfg["max_radius"] = mr
-        got = engine.knn_join(
-            spark, img, q, k=k, level=level, max_cell_rows=mcr,
-            n_images_hint=n, max_radius=mr,
+        got = (
+            index.knn_join(q, k=k, max_radius=mr) if via_index else engine.knn_join(
+                spark, img, q, k=k, level=level, max_cell_rows=mcr,
+                n_images_hint=n, max_radius=mr,
+            )
         ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
         # oracle: per query, k smallest (dist, id), bounded by mr
         rows = []
@@ -119,6 +130,8 @@ def fuzz_geo(spark, rng, trial):
         # at the same distance — the engine ties by id, so exact match:
         assert (got.image_id.to_numpy() == want.image_id.to_numpy()).all(), cfg
         assert np.array_equal(got.dist.to_numpy(), want.dist.to_numpy()), cfg
+    if via_index:
+        index.unpersist()
     return cfg
 
 
@@ -168,20 +181,33 @@ def fuzz_pose(spark, rng, trial):
         "qw": QQ[:, 0], "qx": QQ[:, 1], "qy": QQ[:, 2], "qz": QQ[:, 3],
         "tx": QT[:, 0], "ty": QT[:, 1], "tz": QT[:, 2]}))
     ang = _ang_matrix(QQ, Q)
-    cfg = dict(op=space, n=n, nq=nq, flavor=flavor, k=k, mcr=mcr)
+    # alternate one-shot and index entry points (see fuzz_geo)
+    via_index = bool(rng.integers(0, 2))
+    cfg = dict(op=space, n=n, nq=nq, flavor=flavor, k=k, mcr=mcr,
+               via_index=via_index)
+    index = None
+    if via_index:
+        cls = so3engine.So3Index if space == "so3" else so3engine.Se3Index
+        index = cls(spark, poses, max_cell_rows=mcr, n_poses_hint=n)
     if space == "so3":
         d = ang
         use_radius = bool(rng.integers(0, 2))
         if use_radius:
             r = float(rng.uniform(0.05, 1.5))
             cfg["r"] = r
-            got = so3engine.so3_radius_join(
-                spark, poses, queries, r, max_cell_rows=mcr, n_poses_hint=n
+            got = (
+                index.radius_join(queries, r) if via_index else
+                so3engine.so3_radius_join(
+                    spark, poses, queries, r, max_cell_rows=mcr, n_poses_hint=n
+                )
             ).toPandas()
             val = got.ang.to_numpy()
         else:
-            got = so3engine.so3_knn_join(
-                spark, poses, queries, k=k, max_cell_rows=mcr, n_poses_hint=n
+            got = (
+                index.knn_join(queries, k=k) if via_index else
+                so3engine.so3_knn_join(
+                    spark, poses, queries, k=k, max_cell_rows=mcr, n_poses_hint=n
+                )
             ).toPandas()
             val = got.ang.to_numpy()
     else:
@@ -195,18 +221,26 @@ def fuzz_pose(spark, rng, trial):
         if use_radius:
             r = float(np.quantile(d, rng.uniform(0.001, 0.2)))
             cfg["r"] = r
-            got = so3engine.se3_radius_join(
-                spark, poses, queries, r, rot_weight=rw, trans_weight=tw,
-                max_cell_rows=mcr, n_poses_hint=n,
+            got = (
+                index.radius_join(queries, r, rot_weight=rw, trans_weight=tw)
+                if via_index else so3engine.se3_radius_join(
+                    spark, poses, queries, r, rot_weight=rw, trans_weight=tw,
+                    max_cell_rows=mcr, n_poses_hint=n,
+                )
             ).toPandas()
             val = got.dist.to_numpy()
         else:
-            got = so3engine.se3_knn_join(
-                spark, poses, queries, k=k, rot_weight=rw, trans_weight=tw,
-                max_cell_rows=mcr, n_poses_hint=n,
+            got = (
+                index.knn_join(queries, k=k, rot_weight=rw, trans_weight=tw)
+                if via_index else so3engine.se3_knn_join(
+                    spark, poses, queries, k=k, rot_weight=rw, trans_weight=tw,
+                    max_cell_rows=mcr, n_poses_hint=n,
+                )
             ).toPandas()
             val = got.dist.to_numpy()
     cfg["use_radius"] = use_radius
+    if via_index:
+        index.unpersist()
     qi = got.query_id.str.slice(1).astype(int).to_numpy()
     ii = got.pose_id.str.slice(1).astype(int).to_numpy()
     # the ENGINE's distances are bit-identical to scalar left-to-right

@@ -23,12 +23,16 @@ codec      pure-stdlib image encode/decode (raw / BMP / PNG-zlib) + PSNR
 synth      deterministic synthetic image+caption corpus & geo fixtures
 cells      vectorized tiling index (grid cells, bboxes, rings, SQL exprs)
 kernel     NumPy k-d tree: median build, bounded batch kNN, radius search
-engine     Spark pipelines: build_index, knn_join, radius_join, pip_join,
-           raster-vector join, salting, lineage
+engine     Spark pipelines: GeoIndex, knn_join, radius_join, pip_join,
+           raster-vector join, salting, lineage — and the second phase
+           (split planner, probe, cogroup, kNN re-rank) shared by all six
+           metric joins
 snapshots  parquet snapshot/manifest layer with resume + delta compaction
 datapipe   training-data ops: dedup (exact/minhash/simhash), ANN, text stats
-so3engine  distributed SO(3)/SE(3) kNN joins (antipodal R^4 reduction,
-           weighted compound metric) — the reference's rotation spaces
+so3engine  distributed SO(3)/SE(3) kNN + radius joins (antipodal R^4
+           reduction, weighted compound metric) — the reference's rotation
+           spaces; phase 1 and candidate generators only, the second phase
+           is engine's
 bucketstore bucket-stored geo index: build once, persist bucketBy(part_key),
            query many with no per-batch corpus shuffle
 functions  scalar/space function library (F1-F11 incl. rotateCoeffs,

@@ -12,8 +12,8 @@ it:
 * ``save_geo_index`` writes the salted projection as a parquet table
   bucketed by ``part_key`` (Spark's ``bucketBy`` — files are hash-split by
   the same murmur3 the shuffle would use) with an in-file sort.
-* ``BucketedGeoIndex`` answers kNN / radius joins through the SAME
-  ``_knn_join_on_index`` plan, but the corpus side's cogroup requirement
+* ``BucketedGeoIndex`` is a ``GeoIndex`` whose corpus is the table: it
+  answers kNN / radius joins through the SAME plan, but the corpus side's cogroup requirement
   (hash distribution by part_key) is satisfied by the bucketed SCAN — the
   plan shows no Exchange above the corpus file scan; only the (small)
   query/candidate side shuffles.  Verified by tests/test_bucketstore.py,
@@ -33,7 +33,6 @@ from pathlib import Path
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import engine
 
@@ -90,14 +89,11 @@ def save_geo_index(
     bucketed by part_key (with morton-friendly in-bucket sort on key) under
     ``path``, stats JSON beside them, table ``name`` in the catalog."""
     path = Path(path)
-    img = engine.with_coords(images).select("image_id", "x", "y")
-    if level is None:
-        n = n_images_hint if n_images_hint is not None else img.count()
-        level = engine.cells.level_for_count(n)
-    stats = engine.collect_cell_stats(img, level, max_cell_rows)
-    salted = engine._salted_images(spark, img, stats).select(
-        "image_id", "x", "y", "key", "part_key"
+    built = engine.GeoIndex._unpersisted(
+        spark, images, level, max_cell_rows, n_images_hint
     )
+    stats = built.stats
+    salted = built.img_salted.select("image_id", "x", "y", "key", "part_key")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         salted.write.mode("overwrite")
@@ -112,11 +108,12 @@ def save_geo_index(
     return BucketedGeoIndex(spark, name, path)
 
 
-class BucketedGeoIndex:
+class BucketedGeoIndex(engine.GeoIndex):
     """Query-side handle over a saved bucketed index.  Reconstructs the
     catalog entry after a session restart (in-memory catalogs forget), then
-    serves the same join surface as engine.GeoIndex — without persist() and
-    without a per-query corpus shuffle."""
+    serves engine.GeoIndex's join surface and lifecycle — without persist()
+    and without a per-query corpus shuffle.  unpersist() releases the
+    join intermediates; the table itself is never dropped."""
 
     def __init__(self, spark: SparkSession, name: str, path: str | Path):
         self.spark = spark
@@ -133,9 +130,8 @@ class BucketedGeoIndex:
             )
         self.img_salted = spark.table(self.name)
         self.stats = _stats_from_json((self.path / "stats.json").read_text())
-        self.part_keys = F.broadcast(
-            spark.createDataFrame(engine._candidate_part_keys(self.stats))
-        )
+        self.level = self.stats.level
+        self.part_keys = engine._candidate_part_keys(spark, self.stats)
         # per-index intermediate-cache registry (see engine.GeoIndex)
         self._caches: list[DataFrame] = []
 
@@ -143,27 +139,3 @@ class BucketedGeoIndex:
     def load(cls, spark: SparkSession, path: str | Path) -> "BucketedGeoIndex":
         meta = json.loads((Path(path) / "meta.json").read_text())
         return cls(spark, meta["name"], path)
-
-    def knn_join(
-        self, queries: DataFrame, k: int = 8, max_radius: float = float("inf")
-    ) -> DataFrame:
-        return engine._knn_join_on_index(
-            self.spark,
-            self.img_salted,
-            self.stats,
-            self.part_keys,
-            queries,
-            k,
-            max_radius=max_radius,
-            cache_registry=self._caches,
-        )
-
-    def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
-        # pass the per-index registry (like knn_join): without it the
-        # radius path would drain/pollute the GLOBAL one-shot registry —
-        # freeing e.g. a still-unconsumed checkpoint-backed DBSCAN result
-        # and leaking this index's cand cache past unpersist()
-        return engine._radius_join_on_index(
-            self.spark, self.img_salted, self.stats, self.part_keys, queries, r,
-            cache_registry=self._caches,
-        )

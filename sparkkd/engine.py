@@ -14,6 +14,14 @@ one level up: per-cell data bboxes play the role of node regions, and a
 per-query kth-distance upper bound (derived from cell point counts) prunes
 whole cells before any shuffle row is produced.
 
+All six metric joins (planar here, SO(3)/SE(3) in ``sparkkd.so3engine``;
+kNN and radius) share ONE second phase, in the "shared second phase"
+section below: a per-space generator emits (query row, part_key)
+candidates, ``_second_phase`` caches them, plans heavy-group splits from
+one count collect, probes only the touched part_keys and runs the space's
+cogroup kernel; kNN joins end in ``_rerank_tail``.  ``GeoIndex._build`` is
+the one planar corpus builder (index, one-shot joins, bucketed index).
+
 Skew handling is explicit (north_rule): cells whose row count exceeds
 ``max_cell_rows`` are salted into ``ceil(count/max_cell_rows)`` sub-trees;
 query candidates are replicated to every salt of a candidate cell, so
@@ -189,6 +197,12 @@ class CellStats:
     @property
     def total(self) -> int:
         return int(self.counts.sum())
+
+    @property
+    def part_rows(self) -> tuple[np.ndarray, np.ndarray]:
+        """(keys, corpus rows per part_key of each key): a cell's count is
+        divided across its salt_n part_keys (ceil)."""
+        return self.keys, -(-self.counts // np.maximum(self.salt_n, 1))
 
     @property
     def fine_level(self) -> int:
@@ -436,25 +450,27 @@ def _salted_images(spark: SparkSession, img: DataFrame, stats: CellStats) -> Dat
     )
 
 
-# explicit so an EMPTY corpus yields an empty frame (inference would raise)
-_PART_KEYS_SCHEMA = "key bigint, part_key bigint, salt_n bigint"
-
-
-def _candidate_part_keys(stats: CellStats) -> pd.DataFrame:
-    """(key, part_key, salt_n) exploded over salts — broadcast-joined to
+def _candidate_part_keys(spark: SparkSession, stats: CellStats) -> DataFrame:
+    """Broadcast (key, part_key, salt_n) exploded over salts — joined to
     candidates so a probed cell probes ALL of its salted sub-trees; salt_n
     lets the phase-1 kernel finalize ranks for single-salt cells without a
-    corpus-sized window exchange."""
+    corpus-sized window exchange.  The explicit schema makes an EMPTY
+    corpus yield an empty frame (inference would raise)."""
     reps = stats.salt_n
     key = np.repeat(stats.keys, reps)
     off = np.concatenate([[0], np.cumsum(reps)])[: len(reps)]
     salt = np.arange(reps.sum(), dtype=np.int64) - np.repeat(off, reps)
-    return pd.DataFrame(
-        {
-            "key": key,
-            "part_key": (key << SALT_SHIFT) + salt,
-            "salt_n": np.repeat(reps, reps),
-        }
+    return F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "key": key,
+                    "part_key": (key << SALT_SHIFT) + salt,
+                    "salt_n": np.repeat(reps, reps),
+                }
+            ),
+            schema="key bigint, part_key bigint, salt_n bigint",
+        )
     )
 
 
@@ -493,33 +509,34 @@ def _coarse_groups(stats: CellStats):
     return g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start
 
 
-def _knn_candidates(
-    spark: SparkSession,
-    queries: DataFrame,
-    stats: CellStats,
-    k: int,
-    exclude_home: bool = False,
-    spread: bool = True,
+def _count_bound(dmax: np.ndarray, counts: np.ndarray, k: int) -> np.ndarray:
+    """Per-row statistics-only kth-distance bound (the kNN generators'
+    fallback for rows without a phase-1 bound): walk cells in ascending
+    dmax (upper bound on every member's distance) until their counts
+    cover k — that dmax upper-bounds the kth-NN distance; inf when the
+    whole corpus holds fewer than k rows."""
+    order = np.argsort(dmax, axis=1, kind="stable")
+    cum = np.cumsum(counts[order], axis=1)
+    need = np.argmax(cum >= k, axis=1)
+    enough = cum[:, -1] >= k
+    need = np.where(enough, need, dmax.shape[1] - 1)
+    rows = np.arange(len(need))
+    return np.where(
+        enough, np.take_along_axis(dmax, order, axis=1)[rows, need], np.inf
+    )
+
+
+def _cell_candidates(
+    spark: SparkSession, queries: DataFrame, stats: CellStats, k: int = 0
 ) -> DataFrame:
-    """queries (query_id, x, y [, bound]) -> (query_id, x, y, cell_id)
-    candidate pairs.
-
-    Vectorized cross-cell pruning (mapInPandas over query batches against
-    broadcast cell stats).  The per-query admission bound is
-    ``min(count_bound, provided bound)`` where:
-
-    * count_bound: cells sorted by farthest-corner distance (dmax) are
-      accumulated until their counts cover k; the dmax at that point
-      upper-bounds the kth-NN distance (>= k points provably lie within
-      it) — computable from statistics alone;
-    * provided bound (optional ``bound`` column): the TRUE home-cell kth
-      distance from a phase-1 probe — usually far tighter.
-
-    Cells with min-dist <= bound become candidates — the cross-cell
-    ``shouldTraverse`` (``src/_kdtree_median.hpp:136-138``).  With
-    exclude_home=True the query's own cell (its ``home_key`` column) is
-    skipped — it was already fully probed in phase 1.
-    """
+    """queries (query_id, x, y, bound [, home_key]) -> (query_id, x, y, key)
+    candidate pairs: the cells whose bbox min-distance is <= the row's
+    ``bound`` — the cross-cell ``shouldTraverse``
+    (``src/_kdtree_median.hpp:136-138``), vectorized over query batches
+    against broadcast cell stats.  Shared by both joins: radius rows carry
+    ``bound = r``; kNN phase-2 rows carry the TRUE home-cell kth distance
+    and their ``home_key`` (fully probed in phase 1, skipped here), and a
+    still-inf bound falls back to :func:`_count_bound` over k."""
     g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
 
     bc = spark.sparkContext.broadcast(
@@ -529,14 +546,12 @@ def _knn_candidates(
             g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
         )
     )
-    has_bound = "bound" in queries.columns
-    if spread:
-        # queries usually arrive as one small parquet file = ONE partition;
-        # spread the vectorized pruning work across the cluster first
-        # (spread=False when the input already comes out of a shuffle)
-        queries = queries.repartition(_parallelism(spark))
+    knn = "home_key" in queries.columns
 
     def gen(batches):
+        # mapInArrow: the candidate table is output-sized (one row per
+        # admitted (query, cell) pair) — building it as Arrow take/array
+        # calls skips the pandas object-string round trip both ways
         (
             keys, counts, mnx, mny, mxx, mxy,
             gmnx, gmny, gmxx, gmxy, gorder, gstart,
@@ -550,14 +565,10 @@ def _knn_candidates(
             qid = tbl.column("query_id").chunk(0)
             qx = _pa_np(tbl, "x")
             qy = _pa_np(tbl, "y")
-            given = (
-                _pa_np(tbl, "bound")
-                if has_bound
-                else np.full(rb.num_rows, np.inf)
-            )
+            given = _pa_np(tbl, "bound")
             home = (
                 tbl.column("home_key").to_numpy(zero_copy_only=False)
-                if exclude_home
+                if knn
                 else None
             )
             chunk = max(256, 8_000_000 // max(G_, 1))
@@ -566,7 +577,7 @@ def _knn_candidates(
                 px, py = qx[sl], qy[sl]
                 gb = given[sl]
                 bound = gb.copy()
-                nb = np.nonzero(~np.isfinite(gb))[0]
+                nb = np.nonzero(~np.isfinite(gb))[0] if knn else ()
                 if len(nb) > 0:
                     # count-bound only for the (few) rows lacking a phase-1
                     # bound — full member sweep for just those rows
@@ -574,16 +585,7 @@ def _knn_candidates(
                         px[nb][:, None], py[nb][:, None],
                         mnx[None, :], mny[None, :], mxx[None, :], mxy[None, :],
                     )
-                    order = np.argsort(dmax, axis=1, kind="stable")
-                    cum = np.cumsum(counts[order], axis=1)
-                    need = np.argmax(cum >= k, axis=1)
-                    enough = cum[:, -1] >= k
-                    need = np.where(enough, need, C - 1)
-                    rows = np.arange(len(need))
-                    cb = np.where(
-                        enough, np.take_along_axis(dmax, order, axis=1)[rows, need], np.inf
-                    )
-                    bound[nb] = cb
+                    bound[nb] = _count_bound(dmax, counts, k)
                 # level 1: group boxes
                 dmin_g = cells.bbox_min_dist(
                     px[:, None], py[:, None],
@@ -625,7 +627,7 @@ def _knn_candidates(
     )
 
 
-# ---------------------------------------------------------------- kNN join
+# -------------------------------------------------------------- kNN kernel
 
 
 def _tie_rank(ids) -> np.ndarray:
@@ -736,6 +738,212 @@ def _make_knn_group(
     return knn_group
 
 
+# ------------------------------------------------- shared second phase
+# Every metric join (planar / SO(3) / SE(3), kNN and radius) ends in the
+# same step: a candidate frame of (query row, part_key) pairs, probed
+# against the corpus groups it names.  The space-specific parts are the
+# candidate generator and the cogroup kernel; the split planner, probe
+# filter, cogroup and (for kNN) the re-rank tail below are shared.
+
+# Heavy-cogroup split targets, in (candidate rows x corpus rows per
+# part_key) work units.  kNN's is far higher: a radius group emits output
+# proportional to its work, so Arrow materialization already dominates
+# small groups, while a kNN group emits only ~k rows per candidate — per-
+# unit kernel cost is far lower and only much larger groups amortize the
+# per-subgroup corpus replication + tree rebuild.  Measured (pose sf2,
+# 400k x 4M, k=4): unsplit groups ran 5 s -> 90 s at ~uniform candidate
+# counts, so the single heaviest task WAS the stage wall; at 1e8 the
+# heaviest group splits ~11-way (~8 s worst task).
+_KNN_SPLIT_TARGET = 100_000_000
+_RADIUS_SPLIT_TARGET = 4_000_000
+
+
+def _split_heavy_cogroups(
+    spark: SparkSession,
+    cand: DataFrame,
+    corpus: DataFrame,
+    part_rows: tuple[np.ndarray, np.ndarray],
+    split_target: int,
+    min_rows_per_split: int = 64,
+):
+    """ONE collect over the cached candidate side: per-part_key candidate
+    counts fill the cache, yield the probed part_keys for the corpus
+    probe filter AND drive batch-adaptive cogroup splitting.  A group
+    receiving both many candidate rows and many corpus rows hands ONE task
+    their product (measured: the radius_join_r2 stage's wall was 6.0 s vs
+    0.57 s mean task time; single-task stragglers serialized the se3 sf1
+    radius run for minutes).  Heavy groups split QUERY-side into
+    ceil(work/target) gsalts; only their corpus rows replicate via a
+    broadcast explode, so shuffle volume grows only by the heavy tail's
+    split factor.
+
+    part_rows = (sorted cell keys, corpus rows per part_key of each cell),
+    where a part_key's cell key is part_key >> SALT_SHIFT.  Returns
+    (cand [+ gsalt], probed corpus [+ gsalt])."""
+    crows = cand.groupBy("part_key").count().collect()
+    keys = [int(r_["part_key"]) for r_ in crows]
+    cnts = [int(r_["count"]) for r_ in crows]
+    cell_keys, rows = part_rows
+    ki = np.searchsorted(cell_keys, np.asarray(keys, np.int64) >> SALT_SHIFT)
+    ki = np.clip(ki, 0, max(len(cell_keys) - 1, 0))
+    works = [(k_, c, c * int(rows[i])) for k_, c, i in zip(keys, cnts, ki)]
+    # adaptive target: the static split_target bounds PER-TASK work, but a
+    # workload of few hot groups can still leave most of the cluster idle
+    # (event-log measurement, E=4x8 local-cluster: the pose phase-2 cogroup
+    # ran 9-14 tasks with max-task ~= stage wall at every cluster size).
+    # Aim for ~3 waves of defaultParallelism tasks when total work
+    # justifies it; never finer than split_target/64 (every split
+    # replicates the group's corpus rows once more through the broadcast
+    # explode), and never coarser than the static target.
+    par = max(1, spark.sparkContext.defaultParallelism)
+    total_work = sum(w for _, _, w in works)
+    tgt = min(
+        split_target,
+        max(total_work // (3 * par), max(split_target // 64, 1)),
+    )
+    splits: dict[int, int] = {}
+    for k_, cnt, work in works:
+        s_ = min(256, max(1, -(-work // tgt)))
+        # keep >= min_rows_per_split candidate rows per subtask — finer
+        # buys no balance and multiplies corpus-side tree builds
+        s_ = min(s_, max(1, cnt // min_rows_per_split))
+        if s_ > 1:
+            splits[k_] = s_
+    base_probe = _probe_filter(spark, corpus, keys)
+    if not splits:
+        return cand, base_probe
+    # fan-out: gsalt = pmod(xxhash64(query_id), n_split) on split groups'
+    # candidate rows; their probe-side rows replicate via a broadcast
+    # explode.  Explicit schemas throughout: a bigint gsalt on ONE cogroup
+    # side hash-partitions differently from an int gsalt on the other and
+    # groups silently mispair (the round-5 dtype-parity lesson) — the final
+    # assert fails loudly instead.
+    smap = F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "part_key": np.array(list(splits), np.int64),
+                    "n_split": np.array(list(splits.values()), np.int32),
+                }
+            ),
+            schema="part_key long, n_split int",
+        )
+    )
+    cand = (
+        cand.join(smap, "part_key", "left")
+        .withColumn(
+            "gsalt",
+            F.coalesce(
+                F.pmod(F.xxhash64("query_id"), F.col("n_split")), F.lit(0)
+            ).cast("int"),
+        )
+        .drop("n_split")
+    )
+    exp = F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "part_key": np.repeat(
+                        np.array(list(splits), np.int64),
+                        np.array(list(splits.values()), np.int64),
+                    ),
+                    "gsalt": np.concatenate(
+                        [np.arange(v) for v in splits.values()]
+                    ).astype(np.int32),
+                }
+            ),
+            schema="part_key long, gsalt int",
+        )
+    )
+    heavy = base_probe.join(exp, "part_key")
+    light = (
+        base_probe.join(
+            exp.select("part_key").distinct(), "part_key", "left_anti"
+        ).withColumn("gsalt", F.lit(0).cast("int"))
+    )
+    probe = heavy.unionByName(light.select(*heavy.columns))
+    ct = {f.name: f.dataType.simpleString() for f in cand.schema.fields}
+    pt = {f.name: f.dataType.simpleString() for f in probe.schema.fields}
+    if (ct["part_key"], ct["gsalt"]) != (pt["part_key"], pt["gsalt"]):
+        raise AssertionError(
+            f"cogroup key dtype mismatch: cand={ct}, probe={pt}"
+        )
+    return cand, probe
+
+
+def _second_phase(
+    spark: SparkSession,
+    cand: DataFrame,
+    corpus: DataFrame,
+    part_rows: tuple[np.ndarray, np.ndarray],
+    group_fn,
+    schema: str,
+    registry: list[DataFrame],
+    split_target: int,
+):
+    """Cache the candidate frame, plan splits with its ONE count collect
+    (which also fills every cache upstream of it), probe only the touched
+    part_keys and run ``group_fn`` per cogroup.  Returns (cached
+    candidates, kernel output)."""
+    cand = _register_cache(cand, registry)
+    cand_g, probe = _split_heavy_cogroups(
+        spark, cand, corpus, part_rows, split_target
+    )
+    # with no splits there is no gsalt column at all: grouping stays on
+    # part_key, so a cached corpus partitioning (indexes) satisfies the
+    # cogroup distribution and the probed corpus is NOT re-shuffled (a
+    # (part_key, gsalt) key invalidated the cache's hash(part_key) layout
+    # even when every gsalt was the constant 0)
+    gcols = ["part_key", "gsalt"] if "gsalt" in cand_g.columns else ["part_key"]
+    out = (
+        cand_g.groupby(*gcols)
+        .cogroup(probe.groupby(*gcols))
+        .applyInArrow(group_fn, schema=schema)
+    )
+    return cand, out
+
+
+def _rerank_tail(
+    p1_topk: DataFrame,
+    cand: DataFrame,
+    p2: DataFrame,
+    k: int,
+    id_col: str,
+    dist_col: str,
+    dedupe: bool = False,
+) -> DataFrame:
+    """Final (query_id, id_col, dist_col, rank) of a two-phase kNN join:
+    re-rank ONLY the queries phase 2 probed (broadcast semi/anti joins
+    against the cached candidates — no Q-sized shuffle); everyone else's
+    phase-1 ranks are already final.  dedupe=True first keeps the min
+    distance per (query, id): for a space whose phase 2 can re-hit a row
+    phase 1 already returned (SO(3)'s two antipodal probes)."""
+    cols = ["query_id", id_col, dist_col]
+    affected = F.broadcast(cand.select("query_id").distinct())
+    untouched = p1_topk.join(affected, "query_id", "left_anti").select(
+        *cols, F.col("rank").cast("int")
+    )
+    touched = (
+        p1_topk.join(affected, "query_id", "left_semi")
+        .select(*cols)
+        .unionByName(p2)
+    )
+    if dedupe:
+        touched = touched.groupBy("query_id", id_col).agg(
+            F.min(dist_col).alias(dist_col)
+        )
+    w = Window.partitionBy("query_id").orderBy(dist_col, id_col)
+    reranked = (
+        touched.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols, F.col("rank").cast("int"))
+    )
+    return untouched.unionByName(reranked)
+
+
+# ---------------------------------------------------------------- kNN join
+
+
 def knn_join(
     spark: SparkSession,
     images: DataFrame,
@@ -761,39 +969,20 @@ def knn_join(
     results; pre-filter with functions.l2_is_valid to reject them loudly
     instead.
     """
-    img = with_coords(images).select("image_id", "x", "y")
-    if level is None:
-        n = n_images_hint if n_images_hint is not None else img.count()
-        level = cells.level_for_count(n)
-    stats = collect_cell_stats(img, level, max_cell_rows)
-    img_salted = _salted_images(spark, img, stats)
-    part_keys = F.broadcast(spark.createDataFrame(
-        _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
-    ))
-    return _knn_join_on_index(
-        spark, img_salted, stats, part_keys, queries, k, max_radius=max_radius
-    )
+    idx = GeoIndex._unpersisted(spark, images, level, max_cell_rows, n_images_hint)
+    return _knn_join_on_index(idx, queries, k, max_radius)
 
 
 def _knn_join_on_index(
-    spark: SparkSession,
-    img_salted: DataFrame,
-    stats: CellStats,
-    part_keys: DataFrame,
-    queries: DataFrame,
-    k: int,
-    max_radius: float = float("inf"),
-    cache_registry: list[DataFrame] | None = None,
+    index: GeoIndex, queries: DataFrame, k: int, max_radius: float
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)  # PREVIOUS call in this scope only
+    spark, stats, part_keys = index.spark, index.stats, index.part_keys
+    _release_registry(index._caches)  # PREVIOUS call in this scope only
     q = queries.select(
         "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
     ).filter(_FINITE_QUERY)
     schema = "query_id string, image_id string, dist double"
     key_expr = stats.key_sql("x", "y")
-
     # ---- phase 1: probe each query's HOME cell (all salts of it) --------
     # This is the first descent of the reference search: it yields a TRUE
     # kth-distance bound per query, so phase 2 probes almost nothing.
@@ -803,7 +992,7 @@ def _knn_join_on_index(
     )
     p1 = (
         p1_cand.groupby("part_key")
-        .cogroup(img_salted.groupby("part_key"))
+        .cogroup(index.img_salted.groupby("part_key"))
         .applyInArrow(
             _make_knn_group(k, carry_xy=True, max_radius=max_radius, emit_rank=True),
             schema=schema
@@ -816,7 +1005,7 @@ def _knn_join_on_index(
     # p1 feeds the final/merge split, bound rows, the p2 exclusion AND the
     # final union; cache it once (fills during the p2_cand materialization
     # below — no separate count() job).
-    p1 = _register_cache(p1, cache_registry)
+    p1 = _register_cache(p1, index._caches)
     # single-salt home cells (the overwhelming majority): the kernel's
     # in-group rank/cnt ARE final — those rows skip the Q-sized window
     # exchange entirely.  Only multi-salt cells merge through the window.
@@ -832,7 +1021,7 @@ def _knn_join_on_index(
     # re-ran the p1 window merge once per branch (2 extra exchanges).
     p1_topk = _register_cache(
         p1_final.unionByName(p1_merge).filter(F.col("rank") <= k),
-        cache_registry,
+        index._caches,
     )
 
     # ---- phase 2: probe remaining cells within the bound ----------------
@@ -897,44 +1086,25 @@ def _knn_join_on_index(
     # keeps exact tie semantics: an outside point at dist == bound could
     # still displace the kth by image_id order, so bound == edge probes.
     q_b = q_b.filter(~(F.col("bound") < F.col("home_edge"))).drop("home_edge")
-    p2_cand = _knn_candidates(spark, q_b, stats, k, exclude_home=True, spread=False)
-    p2_cand = _register_cache(
-        p2_cand.join(part_keys, "key").select("query_id", "x", "y", "part_key"),
-        cache_registry,
+    p2_cand = (
+        _cell_candidates(spark, q_b, stats, k)
+        .join(part_keys, "key")
+        .select("query_id", "x", "y", "part_key")
     )
-    # ONE builder job (round-4, VERDICT #5): collecting the probed
-    # part_keys materializes the p1_topk cache (upstream) AND the p2_cand
-    # cache as a side effect, and replaces the probe-keys broadcast
-    # exchange with an InSet pushdown on the corpus — the round-3 floor
-    # (explicit count job + broadcast job) is gone.  Probing only the
-    # touched cells still matters: without it the whole corpus
-    # re-shuffles for a handful of boundary queries.
-    keys = [r["part_key"] for r in p2_cand.select("part_key").distinct().collect()]
-    img_probe = _probe_filter(spark, img_salted, keys)
-    p2 = (
-        p2_cand.groupby("part_key")
-        .cogroup(img_probe.groupby("part_key"))
-        .applyInArrow(_make_knn_group(k, max_radius=max_radius), schema=schema)
-    )
-
-    # re-rank ONLY queries that phase 2 probed (broadcast semi/anti joins —
-    # no Q-sized shuffle); everyone else's phase-1 ranks are already final
-    affected = F.broadcast(p2_cand.select("query_id").distinct())
-    untouched = p1_topk.join(affected, "query_id", "left_anti").select(
-        "query_id", "image_id", "dist", F.col("rank").cast("int")
-    )
-    touched_p1 = p1_topk.join(affected, "query_id", "left_semi").select(
-        "query_id", "image_id", "dist"
-    )
-    reranked = (
-        touched_p1.unionByName(p2)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "image_id", "dist", F.col("rank").cast("int"))
+    # ONE builder job (round-4, VERDICT #5): the split planner's count
+    # collect materializes the p1_topk cache (upstream) AND the p2_cand
+    # cache as a side effect, and its probed part_keys become an InSet
+    # pushdown on the corpus.  Probing only the touched cells still
+    # matters: without it the whole corpus re-shuffles for a handful of
+    # boundary queries.
+    p2_cand, p2 = _second_phase(
+        spark, p2_cand, index.img_salted, stats.part_rows,
+        _make_knn_group(k, max_radius=max_radius), schema, index._caches,
+        _KNN_SPLIT_TARGET,
     )
     # p1_topk/p2_cand stay persisted until the NEXT join call releases them
     # (they must outlive the lazy returned plan's execution)
-    return untouched.unionByName(reranked)
+    return _rerank_tail(p1_topk, p2_cand, p2, k, "image_id", "dist")
 
 
 # ------------------------------------------------------------- GeoIndex
@@ -948,7 +1118,7 @@ class GeoIndex:
     The salted, cell-keyed projection of the corpus is persisted so repeated
     query batches skip the scan + stats + salt join; each query batch still
     pays one cogroup shuffle (at warehouse scale the projection would be
-    bucket-stored instead — see PLANS.md).
+    bucket-stored instead — see bucketstore.BucketedGeoIndex).
     """
 
     def __init__(
@@ -959,35 +1129,45 @@ class GeoIndex:
         max_cell_rows: int = 8192,
         n_images_hint: int | None = None,
     ):
-        self.spark = spark
-        img = with_coords(images).select("image_id", "x", "y")
-        if level is None:
-            n = n_images_hint if n_images_hint is not None else img.count()
-            level = cells.level_for_count(n)
-        self.level = level
-        self.img = img
-        self.stats = collect_cell_stats(img, level, max_cell_rows)
+        self._build(spark, images, level, max_cell_rows, n_images_hint)
         # persist PRE-PARTITIONED on the cogroup key: the cached partitioning
         # satisfies both phases' clustered-distribution requirement, so query
         # batches shuffle only the (small) candidate side — the in-memory
         # twin of the bucket-stored layout (bucketstore.py); verified by
         # tests/test_engine_spark.py::test_geoindex_no_corpus_exchange
         self.img_salted = (
-            _salted_images(spark, img, self.stats)
-            .repartition(_parallelism(spark), "part_key")
-            .persist()
+            self.img_salted.repartition(_parallelism(spark), "part_key").persist()
         )
         self.img_salted.count()  # materialize
-        self.part_keys = F.broadcast(
-            spark.createDataFrame(
-                _candidate_part_keys(self.stats), schema=_PART_KEYS_SCHEMA
-            )
-        )
         # per-index intermediate-cache registry: a new join on THIS index
         # releases THIS index's previous intermediates (consume or
         # materialize the previous result first if you need both); other
         # indexes / sessions are never touched.
         self._caches: list[DataFrame] = []
+
+    @classmethod
+    def _unpersisted(
+        cls, spark, images, level, max_cell_rows, n_images_hint
+    ) -> "GeoIndex":
+        """The same index without the persist, for the one-shot joins (the
+        corpus is consumed once; intermediates go to the module one-shot
+        registry) and for bucketstore.save_geo_index."""
+        idx = cls.__new__(cls)
+        idx._build(spark, images, level, max_cell_rows, n_images_hint)
+        idx._caches = _ONESHOT_CACHES
+        return idx
+
+    def _build(self, spark, images, level, max_cell_rows, n_images_hint):
+        """coords -> level -> cell stats -> salted corpus -> part_keys."""
+        self.spark = spark
+        img = with_coords(images).select("image_id", "x", "y")
+        if level is None:
+            n = n_images_hint if n_images_hint is not None else img.count()
+            level = cells.level_for_count(n)
+        self.level = level
+        self.stats = collect_cell_stats(img, level, max_cell_rows)
+        self.img_salted = _salted_images(spark, img, self.stats)
+        self.part_keys = _candidate_part_keys(spark, self.stats)
 
     @property
     def n_rows(self) -> int:
@@ -996,8 +1176,7 @@ class GeoIndex:
     def lineage(self) -> DataFrame:
         """Per-cell lineage metrics (refined key, count, bbox)."""
         return (
-            self.img.withColumn("cell_id", F.expr(self.stats.key_sql("x", "y")))
-            .groupBy("cell_id")
+            self.img_salted.groupBy(F.col("key").alias("cell_id"))
             .agg(
                 F.count("*").alias("n_rows"),
                 F.min("x").alias("min_x"),
@@ -1010,22 +1189,10 @@ class GeoIndex:
     def knn_join(
         self, queries: DataFrame, k: int = 8, max_radius: float = float("inf")
     ) -> DataFrame:
-        return _knn_join_on_index(
-            self.spark,
-            self.img_salted,
-            self.stats,
-            self.part_keys,
-            queries,
-            k,
-            max_radius=max_radius,
-            cache_registry=self._caches,
-        )
+        return _knn_join_on_index(self, queries, k, max_radius)
 
     def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
-        return _radius_join_on_index(
-            self.spark, self.img_salted, self.stats, self.part_keys, queries, r,
-            cache_registry=self._caches,
-        )
+        return _radius_join_on_index(self, queries, r)
 
     def profile_batch(self, queries: DataFrame, k: int = 8) -> DataFrame:
         """Per-cell query metrics (north_rule: per-partition lineage +
@@ -1114,225 +1281,37 @@ def radius_join(
     (qx, qy, ix, iy) — lets a composite consumer (geo_dbscan) derive
     per-endpoint grid cells from the pair table itself instead of
     re-joining the (output-sized) pair graph against a coordinate table."""
-    img = with_coords(images).select("image_id", "x", "y")
-    if level is None:
-        n = n_images_hint if n_images_hint is not None else img.count()
-        level = cells.level_for_count(n)
-    stats = collect_cell_stats(img, level, max_cell_rows)
-    img_salted = _salted_images(spark, img, stats)
-    part_keys = F.broadcast(spark.createDataFrame(
-        _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
-    ))
-    return _radius_join_on_index(
-        spark, img_salted, stats, part_keys, queries, r, carry_xy=carry_xy
-    )
-
-
-def _split_heavy_cogroups(
-    spark: SparkSession,
-    cand: DataFrame,
-    corpus: DataFrame,
-    stats: CellStats,
-    split_target: int = 4_000_000,
-    min_rows_per_split: int = 64,
-):
-    """ONE collect over the cached candidate side: per-part_key candidate
-    counts fill the cache, yield the probed part_keys for the corpus
-    probe filter AND drive batch-adaptive cogroup splitting (the planar
-    twin of so3engine._split_heavy_groups — the hot-cell group otherwise
-    hands ONE task queries*points work: the radius_join_r2 stage measured
-    wall 6.0 s vs 0.57 s mean task time, a single-straggler floor).
-    Heavy groups split QUERY-side into ceil(work/target) gsalts; only
-    their corpus rows replicate via a broadcast explode.  Returns
-    (cand + gsalt, probed corpus + gsalt) — group on (part_key, gsalt)."""
-    crows = cand.groupBy("part_key").count().collect()
-    keys = [int(r_["part_key"]) for r_ in crows]
-    # corpus rows per part_key from the driver-side stats (no Spark job):
-    # a key's count is divided across its salt_n part_keys
-    ki = np.searchsorted(stats.keys, np.asarray(keys, np.int64) >> SALT_SHIFT)
-    ki = np.clip(ki, 0, max(len(stats.keys) - 1, 0))
-    works: list[tuple[int, int, int]] = []
-    for j, r_ in enumerate(crows):
-        k_ = int(r_["part_key"])
-        i = int(ki[j])
-        ppg = -(-int(stats.counts[i]) // max(int(stats.salt_n[i]), 1))
-        works.append((k_, int(r_["count"]), int(r_["count"]) * ppg))
-    par = max(1, spark.sparkContext.defaultParallelism)
-    total_work = sum(w for _, _, w in works)
-    tgt = min(
-        split_target,
-        max(total_work // (3 * par), max(split_target // 64, 1)),
-    )
-    splits: dict[int, int] = {}
-    for k_, cnt, work in works:
-        s_ = min(256, max(1, -(-work // tgt)))
-        # keep >= min_rows_per_split candidate rows per subtask — finer
-        # buys no balance and multiplies corpus-side tree builds
-        s_ = min(s_, max(1, cnt // min_rows_per_split))
-        if s_ > 1:
-            splits[k_] = s_
-    base_probe = _probe_filter(spark, corpus, keys)
-    if not splits:
-        # no gsalt column at all: grouping stays on part_key, so the
-        # cached corpus partitioning satisfies the cogroup distribution
-        # and the probed corpus is NOT re-shuffled
-        return cand, base_probe
-    return _apply_group_splits(spark, cand, base_probe, splits)
-
-
-def _apply_group_splits(
-    spark: SparkSession, cand: DataFrame, base_probe: DataFrame, splits: dict
-):
-    """Attach gsalt = pmod(xxhash64(query_id), n_split) to split groups'
-    candidate rows and replicate their probe-side rows via a broadcast
-    explode (shared by the planar radius join and the pose engines —
-    the split DECISION differs per engine, the fan-out mechanics don't).
-
-    Explicit schemas throughout: a bigint gsalt on ONE cogroup side
-    hash-partitions differently from an int gsalt on the other and
-    groups silently mispair (the round-5 dtype-parity lesson) — the
-    final assert fails loudly instead."""
-    smap = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "part_key": np.array(list(splits), np.int64),
-                    "n_split": np.array(list(splits.values()), np.int32),
-                }
-            ),
-            schema="part_key long, n_split int",
-        )
-    )
-    cand = (
-        cand.join(smap, "part_key", "left")
-        .withColumn(
-            "gsalt",
-            F.coalesce(
-                F.pmod(F.xxhash64("query_id"), F.col("n_split")), F.lit(0)
-            ).cast("int"),
-        )
-        .drop("n_split")
-    )
-    exp = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "part_key": np.repeat(
-                        np.array(list(splits), np.int64),
-                        np.array(list(splits.values()), np.int64),
-                    ),
-                    "gsalt": np.concatenate(
-                        [np.arange(v) for v in splits.values()]
-                    ).astype(np.int32),
-                }
-            ),
-            schema="part_key long, gsalt int",
-        )
-    )
-    heavy = base_probe.join(exp, "part_key")
-    light = (
-        base_probe.join(
-            exp.select("part_key").distinct(), "part_key", "left_anti"
-        ).withColumn("gsalt", F.lit(0).cast("int"))
-    )
-    probe = heavy.unionByName(light.select(*heavy.columns))
-    ct = {f.name: f.dataType.simpleString() for f in cand.schema.fields}
-    pt = {f.name: f.dataType.simpleString() for f in probe.schema.fields}
-    if (ct["part_key"], ct["gsalt"]) != (pt["part_key"], pt["gsalt"]):
-        raise AssertionError(
-            f"cogroup key dtype mismatch: cand={ct}, probe={pt}"
-        )
-    return cand, probe
+    idx = GeoIndex._unpersisted(spark, images, level, max_cell_rows, n_images_hint)
+    return _radius_join_on_index(idx, queries, r, carry_xy=carry_xy)
 
 
 def _radius_join_on_index(
-    spark: SparkSession,
-    img_salted: DataFrame,
-    stats: CellStats,
-    part_keys: DataFrame,
-    queries: DataFrame,
-    r: float,
-    cache_registry: list[DataFrame] | None = None,
-    carry_xy: bool = False,
+    index: GeoIndex, queries: DataFrame, r: float, carry_xy: bool = False
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)  # PREVIOUS call in this scope only
-    q = queries.select(
-        "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
-    ).filter(_FINITE_QUERY)
-    g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
-    bc = spark.sparkContext.broadcast(
-        (
-            stats.keys, stats.min_x, stats.min_y, stats.max_x, stats.max_y,
-            g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
+    spark = index.spark
+    _release_registry(index._caches)  # PREVIOUS call in this scope only
+    # queries usually arrive as one small parquet file = ONE partition;
+    # spread the vectorized pruning work across the cluster first
+    q = (
+        queries.select(
+            "query_id",
+            F.col("qlon").alias("x"),
+            F.col("qlat").alias("y"),
+            F.lit(float(r)).alias("bound"),
         )
+        .filter(_FINITE_QUERY)
+        .repartition(_parallelism(spark))
     )
-    q = q.repartition(_parallelism(spark))
-
-    def gen(batches):
-        # mapInArrow: the candidate table is output-sized (one row per
-        # admitted (query, cell) pair) — building it as Arrow take/array
-        # calls skips the pandas object-string round trip both ways
-        keys, mnx, mny, mxx, mxy, gmnx, gmny, gmxx, gmxy, gorder, gstart = bc.value
-        C = len(keys)
-        G_ = len(gmnx)
-        for rb in batches:
-            if rb.num_rows == 0 or C == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid = tbl.column("query_id").chunk(0)
-            qx = _pa_np(tbl, "x")
-            qy = _pa_np(tbl, "y")
-            chunk = max(256, 8_000_000 // max(G_, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                px, py = qx[sl], qy[sl]
-                # two-level: coarse group boxes, then members of passing
-                # groups only (same structure as _knn_candidates)
-                dmin_g = cells.bbox_min_dist(
-                    px[:, None], py[:, None],
-                    gmnx[None, :], gmny[None, :], gmxx[None, :], gmxy[None, :],
-                )
-                adm_g = dmin_g <= r
-                out_qi: list[np.ndarray] = []
-                out_ci: list[np.ndarray] = []
-                for g in np.nonzero(adm_g.any(axis=0))[0]:
-                    rows_g = np.nonzero(adm_g[:, g])[0]
-                    mem = gorder[gstart[g] : gstart[g + 1]]
-                    dmin = cells.bbox_min_dist(
-                        px[rows_g][:, None], py[rows_g][:, None],
-                        mnx[mem][None, :], mny[mem][None, :],
-                        mxx[mem][None, :], mxy[mem][None, :],
-                    )
-                    qi_l, ci_l = np.nonzero(dmin <= r)
-                    if len(qi_l) > 0:
-                        out_qi.append(rows_g[qi_l])
-                        out_ci.append(mem[ci_l])
-                if not out_qi:
-                    continue
-                qi = np.concatenate(out_qi)
-                ci = np.concatenate(out_ci)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid, pa.array(qi + c0)),
-                        "x": pa.array(qx[qi + c0]),
-                        "y": pa.array(qy[qi + c0]),
-                        "key": pa.array(keys[ci]),
-                    }
-                )
-
-    cand = q.mapInArrow(gen, schema="query_id string, x double, y double, key long")
-    cand = cand.join(part_keys, "key").select("query_id", "x", "y", "part_key")
-    # cache + ONE collect (counts): fills the cache, drives the corpus
-    # probe filter AND the heavy-group split (guide §2.5: the hot-cell
-    # group was a measured single-task straggler)
-    cand = _register_cache(cand, cache_registry)
-    cand, img_probe = _split_heavy_cogroups(spark, cand, img_salted, stats)
+    cand = (
+        _cell_candidates(spark, q, index.stats)
+        .join(index.part_keys, "key")
+        .select("query_id", "x", "y", "part_key")
+    )
 
     out_schema = "query_id string, image_id string, dist double"
     if carry_xy:
         out_schema += ", qx double, qy double, ix double, iy double"
+
     empty_tbl = _EMPTY_PAIRS
     if carry_xy:
         empty_tbl = pa.table(
@@ -1364,14 +1343,14 @@ def _radius_join_on_index(
             out["iy"] = pa.array(pts[idx, 1])
         return pa.table(out)
 
-    gcols = (
-        ["part_key", "gsalt"] if "gsalt" in cand.columns else ["part_key"]
+    # cache + ONE collect (counts): fills the cache, drives the corpus
+    # probe filter AND the heavy-group split (guide §2.5: the hot-cell
+    # group was a measured single-task straggler)
+    _, hits = _second_phase(
+        spark, cand, index.img_salted, index.stats.part_rows, radius_group,
+        out_schema, index._caches, _RADIUS_SPLIT_TARGET,
     )
-    return (
-        cand.groupby(*gcols)
-        .cogroup(img_probe.groupby(*gcols))
-        .applyInArrow(radius_group, schema=out_schema)
-    )
+    return hits
 
 
 # --------------------------------------------------------- point-in-polygon

@@ -15,6 +15,13 @@ SKEW-ADAPTIVE layout:
   through leaf-cell statistics; queries whose bound is strictly inside
   their home grid cell (home-edge early exit) skip phase 2 entirely.
 
+Only the phase-1 probes, candidate generators (``_so3_candidates`` /
+``_se3_candidates``, each shared by its space's kNN phase 2 and radius
+join) and cogroup kernels are pose-specific; the split planner, probe
+filter, cogroup and kNN re-rank tail are the geo engine's shared second
+phase (``engine._second_phase`` / ``engine._rerank_tail``), and both
+indexes share one build / lineage / unpersist lifecycle (``_PoseIndex``).
+
 ADAPTIVE LAYOUT (round-3, after sf2 profiling): pruning statistics live at
 LEAF grid cells — a base fine level L everywhere, except inside HOT base
 cells (count > max_cell_rows), which are spatially REFINED three levels
@@ -65,7 +72,6 @@ selection tie can never cut a candidate the oracle would rank inside k.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -77,11 +83,15 @@ from pyspark.sql import functions as F
 
 from . import kernel
 from .engine import (
-    _apply_group_splits,
+    _KNN_SPLIT_TARGET,
+    _RADIUS_SPLIT_TARGET,
+    SALT_SHIFT,
+    _count_bound,
     _pa_np,
-    _probe_filter,
     _register_cache,
     _release_registry,
+    _rerank_tail,
+    _second_phase,
     _tie_rank,
 )
 
@@ -98,7 +108,7 @@ def _layout_cache(layout) -> dict:
 
 
 def _session_key(spark: SparkSession) -> str:
-    """Stable per-context cache key.  _session_key(spark) is NOT safe here: a new
+    """Stable per-context cache key.  id(spark) is NOT safe here: a new
     session object can reuse a stopped session's address and the cache
     would serve broadcasts bound to a dead SparkContext."""
     try:
@@ -113,24 +123,12 @@ def _cached(layout, key, build):
         c[key] = build()
     return c[key]
 
-SALT_BITS = 12
+SALT_BITS = SALT_SHIFT  # the shared split planner decodes pid = part_key >> SALT_SHIFT
 LVL_SHIFT = 48  # leaf key = (level << LVL_SHIFT) | cell  (cell < 2^(d*10))
 CELL_MASK = (np.int64(1) << LVL_SHIFT) - 1
 GROUP_SHIFT = 1  # partitions pack under the base level's ancestor this far up
 REFINE_STEP = 3  # hot base cells refine this many levels deeper
 MAX_LEAF_LEVEL = 10
-# kNN-phase-2 heavy-group split target, in (candidate rows x partition
-# poses) work units.  Lower than the radius default (4M): a radius group
-# emits output proportional to its work, so Arrow materialization already
-# dominates small groups, while a kNN group emits only ~k rows per
-# candidate — per-unit kernel cost is far lower and only much larger
-# groups amortize the per-subgroup corpus replication + tree rebuild.
-# Measured (sf2, 400k x 4M, k=4): unsplit groups ran 5 s -> 90 s at
-# ~uniform candidate counts (per-candidate scan cost varies ~20x with
-# local pose density), so the single heaviest task WAS the stage wall;
-# at 1e8 the heaviest group splits ~11-way (~8 s worst task).
-_KNN_SPLIT_TARGET = 100_000_000
-
 QCOLS = ("qw", "qx", "qy", "qz")
 TCOLS = ("tx", "ty", "tz")
 CCOLS = ("cw", "cx", "cy", "cz")  # canonicalized quaternion coefficients
@@ -287,6 +285,15 @@ class PoseLayout:
     @property
     def total(self) -> int:
         return int(self.leaf_counts.sum())
+
+    @property
+    def part_rows(self) -> tuple[np.ndarray, np.ndarray]:
+        """(pids, poses per part_key of each partition): a salted
+        partition's poses are divided across its salt_n keys (ceil)."""
+        return (
+            np.arange(self.n_partitions, dtype=np.int64),
+            -(-self.p_counts // np.maximum(self.p_salt_n, 1)),
+        )
 
     @property
     def refine_level(self) -> int | None:
@@ -625,8 +632,19 @@ def _trans_bounds(poses: DataFrame) -> list[tuple[float, float]]:
     return out
 
 
-def _leaf_pid_df(spark: SparkSession, layout: PoseLayout) -> pd.DataFrame:
-    return pd.DataFrame({"key": layout.leaf_keys, "pid": layout.leaf_pid})
+def _leaf_pid(spark: SparkSession, layout: PoseLayout) -> DataFrame:
+    """(leaf key, pid) — a kNN query's home pid (cached per layout +
+    session, see _leaf_salts)."""
+    return _cached(
+        layout,
+        ("leaf_pid", _session_key(spark)),
+        lambda: F.broadcast(
+            spark.createDataFrame(
+                pd.DataFrame({"key": layout.leaf_keys, "pid": layout.leaf_pid}),
+                schema="key bigint, pid bigint",
+            )
+        ),
+    )
 
 
 # --------------------------------------------------- pruning geometry (d-D)
@@ -659,21 +677,6 @@ def _bbox_min_max_dist(p: np.ndarray, lo: np.ndarray, hi: np.ndarray):
     return np.sqrt(dmin2), np.sqrt(dmax2)
 
 
-def _count_bound(dmin, dmax, counts, k):
-    """Per-row admission bound: walk cells in ascending dmax until their
-    counts cover k — that dmax upper-bounds the kth-NN distance.
-    Statistics-only FALLBACK for queries without a phase-1 home bound."""
-    order = np.argsort(dmax, axis=1, kind="stable")
-    cum = np.cumsum(counts[order], axis=1)
-    need = np.argmax(cum >= k, axis=1)
-    enough = cum[:, -1] >= k
-    need = np.where(enough, need, dmax.shape[1] - 1)
-    rows = np.arange(len(need))
-    return np.where(
-        enough, np.take_along_axis(dmax, order, axis=1)[rows, need], np.inf
-    )
-
-
 def _coarsen_nd(cell: np.ndarray, level: int, coarse: int, dims: int) -> np.ndarray:
     """Ancestor ids at `coarse` of d-D grid cells at `level` (axis 0 most
     significant, the grid_cell_sql layout)."""
@@ -703,7 +706,7 @@ ADMIT_STATS = {"dense_cells": 0, "pair_tests": 0}
 # level costs ~7% steady-join wall — BENCH/BASELINE.md §I); the group
 # level exists for P >> 10k where dense admission memory grows linearly.
 # Tests pin this to 0 to force the 3-level path at small P.
-DENSE_P_MAX = int(os.environ.get("SPARKKD_DENSE_P_MAX", "2048"))
+DENSE_P_MAX = 2048
 
 
 def _f32_outward(lo: np.ndarray, hi: np.ndarray):
@@ -735,9 +738,7 @@ def _f32_pair(lo, hi):
 # pairs but changes no result — so above the budget we ship None and the
 # admission functions skip the leaf pass, keeping the broadcast bounded
 # at any corpus size.
-_MAX_LEAF_BCAST_BYTES = int(
-    os.environ.get("SPARKKD_MAX_LEAF_BCAST_BYTES", str(256 << 20))
-)
+_MAX_LEAF_BCAST_BYTES = 256 << 20
 
 
 def _f32_leaf_outward(lo, hi):
@@ -1033,17 +1034,17 @@ def level_for_poses(n_rows: int, dims: int, target: int = 192, max_level: int = 
     return max(1, min(max_level, lvl))
 
 
-# ------------------------------------------------------------ SO(3) join
+# ------------------------------------------------------------ pose indexes
 
 
-_B4 = [(-1.0, 2.0)] * 4
-
-
-class So3Index:
-    """Build-once / query-many SO(3) index (the reference's KDTree contract
-    applied to the rotation space): canonicalized, refinement-salted corpus
+class _PoseIndex:
+    """Build-once / query-many pose index (the reference's KDTree contract
+    applied to the pose spaces): the keyed, refinement-salted corpus is
     persisted PRE-PARTITIONED on part_key so repeat query batches shuffle
-    only the candidate side (same layout trick as engine.GeoIndex)."""
+    only the candidate side (same layout trick as engine.GeoIndex).  The
+    one-shot joins build the same index through :meth:`_unpersisted`."""
+
+    _DIMS: int  # grid dimensions (sizes the base level)
 
     def __init__(
         self,
@@ -1053,25 +1054,9 @@ class So3Index:
         max_cell_rows: int = 16384,
         n_poses_hint: int | None = None,
     ):
-        self.spark = spark
-        if level is None:
-            n = n_poses_hint if n_poses_hint is not None else poses.count()
-            level = level_for_poses(n, dims=4)
-        self.level = level
-        sign = canon_sign_sql()
-        canon = poses.select(
-            "pose_id",
-            *QCOLS,  # grid exprs read the raw coefficients via the sign
-            *[(F.expr(f"{sign} * {c}")).alias(f"c{c[1]}") for c in QCOLS],
-        )
-        self.layout = build_layout(
-            canon, list(CCOLS), _B4, list(CCOLS), 4, level, max_cell_rows
-        )
-        self.leaf_expr = leaf_key_sql(list(CCOLS), _B4, self.layout)
+        self._build(spark, poses, level, max_cell_rows, n_poses_hint)
         self.corpus = (
-            _salted(canon, spark, self.layout, self.leaf_expr, "pose_id")
-            .select("pose_id", *CCOLS, "part_key")
-            .repartition(
+            self.corpus.repartition(
                 int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
             )
             .persist()
@@ -1079,14 +1064,24 @@ class So3Index:
         self.corpus.count()  # materialize
         self._caches: list[DataFrame] = []
 
-    def knn_join(
-        self, queries: DataFrame, k: int = 8, max_radius: float = float("inf")
-    ) -> DataFrame:
-        return _so3_knn_on_index(
-            self.spark, self.corpus, self.layout, queries, k,
-            max_radius=max_radius, cache_registry=self._caches,
-        )
+    @classmethod
+    def _unpersisted(cls, spark, poses, level, max_cell_rows, n_poses_hint):
+        """The same index without the persist, for the one-shot joins: the
+        corpus is consumed once and intermediates go to the module one-shot
+        registry (released by the next one-shot call)."""
+        idx = cls.__new__(cls)
+        idx._build(spark, poses, level, max_cell_rows, n_poses_hint)
+        idx._caches = _ONESHOT_CACHES
+        return idx
 
+    def _build(self, spark, poses, level, max_cell_rows, n_poses_hint):
+        self.spark = spark
+        if level is None:
+            n = n_poses_hint if n_poses_hint is not None else poses.count()
+            level = level_for_poses(n, dims=self._DIMS)
+        self.level = level
+        # per space: layout, leaf_expr and the (unpersisted) keyed corpus
+        self._keyed(poses, level, max_cell_rows)
 
     def lineage(self) -> DataFrame:
         """Per-partition lineage metrics (north_rule: cell id, row counts,
@@ -1106,31 +1101,57 @@ class So3Index:
         )
         return self.spark.createDataFrame(pdf)
 
-    def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
-        return _so3_radius_on_index(
-            self.spark, self.corpus, self.layout, queries, r,
-            cache_registry=self._caches,
-        )
-
     def unpersist(self) -> None:
         _release_registry(self._caches)
         self.corpus.unpersist()
 
 
-def _so3_corpus(spark, poses, level, max_cell_rows):
-    sign = canon_sign_sql()
-    canon = poses.select(
-        "pose_id",
-        *QCOLS,
-        *[(F.expr(f"{sign} * {c}")).alias(f"c{c[1]}") for c in QCOLS],
-    )
-    layout = build_layout(
-        canon, list(CCOLS), _B4, list(CCOLS), 4, level, max_cell_rows
-    )
-    corpus = _salted(
-        canon, spark, layout, leaf_key_sql(list(CCOLS), _B4, layout), "pose_id"
-    ).select("pose_id", *CCOLS, "part_key")
-    return corpus, layout
+# ------------------------------------------------------------ SO(3) join
+
+
+_B4 = [(-1.0, 2.0)] * 4
+
+
+class So3Index(_PoseIndex):
+    """SO(3) index: canonicalized quaternion coefficients on the adaptive
+    4-D leaf grid."""
+
+    _DIMS = 4
+
+    def _keyed(self, poses, level, max_cell_rows) -> None:
+        sign = canon_sign_sql()
+        canon = poses.select(
+            "pose_id",
+            *QCOLS,  # grid exprs read the raw coefficients via the sign
+            *[(F.expr(f"{sign} * {c}")).alias(f"c{c[1]}") for c in QCOLS],
+        )
+        self.layout = build_layout(
+            canon, list(CCOLS), _B4, list(CCOLS), 4, level, max_cell_rows
+        )
+        self.leaf_expr = leaf_key_sql(list(CCOLS), _B4, self.layout)
+        self.corpus = _salted(
+            canon, self.spark, self.layout, self.leaf_expr, "pose_id"
+        ).select("pose_id", *CCOLS, "part_key")
+
+    def _queries(self, queries: DataFrame) -> DataFrame:
+        """Finite queries, canonicalized, spread over the shuffle width."""
+        sign = canon_sign_sql()
+        return (
+            queries.filter(_finite_pred(QCOLS))
+            .select(
+                "query_id",
+                *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
+            )
+            .repartition(int(self.spark.conf.get("spark.sql.shuffle.partitions")))
+        )
+
+    def knn_join(
+        self, queries: DataFrame, k: int = 8, max_radius: float = float("inf")
+    ) -> DataFrame:
+        return _so3_knn_on_index(self, queries, k, max_radius)
+
+    def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
+        return _so3_radius_on_index(self, queries, r)
 
 
 def so3_knn_join(
@@ -1160,25 +1181,149 @@ def so3_knn_join(
     One-shot convenience over :class:`So3Index` (kept unpersisted: the
     corpus is consumed once, exactly like engine.knn_join vs GeoIndex).
     """
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=4)
-    corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows)
-    return _so3_knn_on_index(spark, corpus, layout, queries, k, max_radius=max_radius)
+    idx = So3Index._unpersisted(spark, poses, level, max_cell_rows, n_poses_hint)
+    return _so3_knn_on_index(idx, queries, k, max_radius)
+
+
+def _so3_candidates(index: So3Index, rows: DataFrame, k: int = 0) -> DataFrame:
+    """rows (query_id, cw..cz, bound [, kp, kp_pid, kn_pid]) -> candidate
+    (query_id, pw..pz, part_key): each antipodal probe point against every
+    partition whose member-leaf bboxes come within ``bound`` (chord
+    space).  Shared by both joins: radius rows carry only the padded chord;
+    kNN phase-2 rows carry their home leaf key and both probes' home pids
+    (-1 when unoccupied; probed in phase 1, skipped here), exit early when
+    the bound is inside their own leaf cell, and a still-inf bound falls
+    back to a count bound over k."""
+    spark, layout = index.spark, index.layout
+    bc = _cached(
+        layout,
+        ("so3_bc", _session_key(spark)),
+        lambda: spark.sparkContext.broadcast(
+            (
+                *_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
+                *_f32_outward(layout.p_lo, layout.p_hi), layout.p_start,
+                layout.g_counts,
+                *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start,
+            )
+        ),
+    )
+    knn = "kp_pid" in rows.columns
+    ccols = list(CCOLS)
+
+    def gen(batches):
+        (lo, hi, p_lo, p_hi, p_start,
+         g_counts, g_lo, g_hi, g_start) = bc.value
+        G = len(g_counts)
+        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
+        vmin = np.full(4, -1.0)
+        vspan = np.full(4, 2.0)
+        for rb in batches:
+            if rb.num_rows == 0 or G == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            qid_arr = tbl.column("query_id").chunk(0)
+            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
+            given = _pa_np(tbl, "bound")
+            if knn:
+                kp = tbl.column("kp").to_numpy(zero_copy_only=False)
+                kp_pid = tbl.column("kp_pid").to_numpy(zero_copy_only=False)
+                kn_pid = tbl.column("kn_pid").to_numpy(zero_copy_only=False)
+                n_leaf = (np.int64(1) << (kp >> LVL_SHIFT)).astype(np.int64)
+            # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however
+            # large the corpus (G ~ sqrt(P), not P)
+            chunk = max(256, 8_000_000 // max(G, 1))
+            for c0 in range(0, rb.num_rows, chunk):
+                sl = slice(c0, min(c0 + chunk, rb.num_rows))
+                P4 = C4[sl]
+                b = given[sl].copy()
+                homes = (None, None)
+                if knn:
+                    nb = np.nonzero(~np.isfinite(b))[0]
+                    if len(nb) > 0:
+                        # statistics-only fallback at GROUP granularity:
+                        # the union-box dmax still upper-bounds every
+                        # member, so walking groups by dmax until g_counts
+                        # cover k stays a valid (looser) kth bound — and
+                        # the dense sweep is (nb, G), never (nb, leaves)
+                        b[nb] = np.minimum(
+                            _count_bound(
+                                _bbox_min_max_dist(P4[nb], g_lo, g_hi)[1],
+                                g_counts, k,
+                            ),
+                            _count_bound(
+                                _bbox_min_max_dist(-P4[nb], g_lo, g_hi)[1],
+                                g_counts, k,
+                            ),
+                        )
+                    # home-edge exit against the query's OWN leaf cell (its
+                    # level encodes the width — refined leaves test tighter)
+                    edge = _grid_home_edge(P4, vmin, vspan, n_leaf[sl])
+                    homes = (kp_pid[sl], kn_pid[sl])
+                for sgn, home in zip((1.0, -1.0), homes):
+                    if sgn < 0:
+                        # canonical corpus points all have cw >= 0: the
+                        # minus probe is >= cw_q from every point
+                        alive = ~(b < P4[:, 0])
+                    elif knn:
+                        alive = ~(b < edge)
+                    else:
+                        alive = np.ones(len(P4), dtype=bool)
+                    sel = np.nonzero(alive)[0]
+                    if len(sel) == 0:
+                        continue
+                    qi, pid = _partition_candidates(
+                        sgn * P4[sel], b[sel], la,
+                        home_pid=None if home is None else home[sel],
+                    )
+                    if len(qi) == 0:
+                        continue
+                    pr = sgn * P4[sel[qi]]
+                    yield pa.RecordBatch.from_pydict(
+                        {
+                            "query_id": pc.take(
+                                qid_arr, pa.array(sel[qi] + c0)
+                            ),
+                            "pw": pa.array(pr[:, 0]),
+                            "px": pa.array(pr[:, 1]),
+                            "py": pa.array(pr[:, 2]),
+                            "pz": pa.array(pr[:, 3]),
+                            "pid": pa.array(pid),
+                        }
+                    )
+
+    return (
+        rows.mapInArrow(
+            gen,
+            schema="query_id string, pw double, px double, py double,"
+            " pz double, pid long",
+        )
+        .join(_pid_salts(spark, layout), "pid")
+        .select("query_id", "pw", "px", "py", "pz", "part_key")
+    )
+
+
+def _cached_p1_topk(
+    p1: DataFrame, k: int, id_col: str, dist_col: str, registry: list[DataFrame]
+) -> DataFrame:
+    """Cache a pose kNN's phase-1 output AND its windowed top-k (rank,
+    cnt): the bound rows (job A) and the re-rank's untouched/touched
+    branches (job B) all consume it — without the second cache job B
+    re-ran the p1 window merge once per branch."""
+    p1 = _register_cache(p1, registry)
+    w = Window.partitionBy("query_id").orderBy(dist_col, id_col)
+    return _register_cache(
+        p1.withColumn("rank", F.row_number().over(w))
+        .withColumn("cnt", F.count("*").over(Window.partitionBy("query_id")))
+        .filter(F.col("rank") <= k),
+        registry,
+    )
 
 
 def _so3_knn_on_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    layout: PoseLayout,
-    queries: DataFrame,
-    k: int,
-    max_radius: float = float("inf"),
-    cache_registry: list[DataFrame] | None = None,
+    index: So3Index, queries: DataFrame, k: int, max_radius: float
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
+    spark, layout, corpus = index.spark, index.layout, index.corpus
+    _release_registry(index._caches)
     mr = float(max_radius)
     # chord-space seed for tree pruning (padded superset); the EXACT libm
     # angle filters inside the kernels, so the pad only adds work and the
@@ -1188,30 +1333,12 @@ def _so3_knn_on_index(
         if np.isfinite(mr)
         else float("inf")
     )
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sign = canon_sign_sql()
     ccols = list(CCOLS)
-    qc = (
-        queries.filter(_finite_pred(QCOLS))
-        .select(
-            "query_id",
-            *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
-        )
-        .repartition(shuffle_n)
-    )
-    pos_leaf = leaf_key_sql(ccols, _B4, layout)
+    qc = index._queries(queries)
+    pos_leaf = index.leaf_expr
     neg_leaf = leaf_key_sql([f"(- {c})" for c in ccols], _B4, layout)
     leaf_salts = _leaf_salts(spark, layout)
-    pid_salts = _pid_salts(spark, layout)
-    leaf_pid = _cached(
-        layout,
-        ("leaf_pid", _session_key(spark)),
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                _leaf_pid_df(spark, layout), schema="key bigint, pid bigint"
-            )
-        ),
-    )
+    leaf_pid = _leaf_pid(spark, layout)
 
     # ---- phase 1: probe each probe-point's HOME partition (all salts) ---
     probes = (
@@ -1294,18 +1421,7 @@ def _so3_knn_on_index(
             " cw double, cx double, cy double, cz double",
         )
     )
-    w = Window.partitionBy("query_id").orderBy("ang", "pose_id")
-    wq = Window.partitionBy("query_id")
-    p1 = _register_cache(p1, cache_registry)
-    # cache the windowed top-k too: bound_rows (job A) and untouched/
-    # touched (job B) all consume it — without this, job B re-ran the
-    # p1 window merge once per branch
-    p1_topk = _register_cache(
-        p1.withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(wq))
-        .filter(F.col("rank") <= k),
-        cache_registry,
-    )
+    p1_topk = _cached_p1_topk(p1, k, "pose_id", "ang", index._caches)
 
     # ---- phase 2: bound rows, early exits, partition admission ----------
     # The kth row's OWN eu is a valid phase-2 bound: eu >= chord(ang) for
@@ -1379,111 +1495,6 @@ def _so3_knn_on_index(
         .fillna({"kp_pid": -1, "kn_pid": -1})
     )
 
-    bc = _cached(
-        layout,
-        ("so3knn_bc", _session_key(spark)),
-        lambda: spark.sparkContext.broadcast(
-            (
-                *_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
-                *_f32_outward(layout.p_lo, layout.p_hi), layout.p_start,
-                layout.g_counts,
-                *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start,
-            )
-        ),
-    )
-
-    def gen(batches):
-        (lo, hi, p_lo, p_hi, p_start,
-         g_counts, g_lo, g_hi, g_start) = bc.value
-        G = len(g_counts)
-        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
-        vmin = np.full(4, -1.0)
-        vspan = np.full(4, 2.0)
-        for rb in batches:
-            if rb.num_rows == 0 or G == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
-            given = _pa_np(tbl, "bound")
-            kp = tbl.column("kp").to_numpy(zero_copy_only=False)
-            kp_pid = tbl.column("kp_pid").to_numpy(zero_copy_only=False)
-            kn_pid = tbl.column("kn_pid").to_numpy(zero_copy_only=False)
-            n_leaf = (np.int64(1) << (kp >> LVL_SHIFT)).astype(np.int64)
-            # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however
-            # large the corpus (G ~ sqrt(P), not P)
-            chunk = max(256, 8_000_000 // max(G, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P4 = C4[sl]
-                b = given[sl].copy()
-                nb = np.nonzero(~np.isfinite(b))[0]
-                if len(nb) > 0:
-                    # statistics-only fallback at GROUP granularity: the
-                    # union-box dmax still upper-bounds every member, so
-                    # walking groups by dmax until g_counts cover k stays
-                    # a valid (looser) kth bound — and the dense sweep is
-                    # (nb, G), never (nb, leaves)
-                    dps = [
-                        _bbox_min_max_dist(s * P4[nb], g_lo, g_hi)
-                        for s in (1.0, -1.0)
-                    ]
-                    b[nb] = np.minimum(
-                        _count_bound(dps[0][0], dps[0][1], g_counts, k),
-                        _count_bound(dps[1][0], dps[1][1], g_counts, k),
-                    )
-                # home-edge exit against the query's OWN leaf cell (its
-                # level encodes the width — refined leaves test tighter)
-                edge = _grid_home_edge(P4, vmin, vspan, n_leaf[sl])
-                for sgn, home in ((1.0, kp_pid[sl]), (-1.0, kn_pid[sl])):
-                    if sgn > 0:
-                        alive = ~(b < edge)
-                    else:
-                        # canonical corpus points all have cw >= 0: the
-                        # minus probe is >= cw_q from every point
-                        alive = ~(b < P4[:, 0])
-                    rows = np.nonzero(alive)[0]
-                    if len(rows) == 0:
-                        continue
-                    qi, pid = _partition_candidates(
-                        sgn * P4[rows], b[rows], la, home_pid=home[rows]
-                    )
-                    if len(qi) == 0:
-                        continue
-                    pr = sgn * P4[rows[qi]]
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "query_id": pc.take(
-                                qid_arr, pa.array(rows[qi] + c0)
-                            ),
-                            "pw": pa.array(pr[:, 0]),
-                            "px": pa.array(pr[:, 1]),
-                            "py": pa.array(pr[:, 2]),
-                            "pz": pa.array(pr[:, 3]),
-                            "pid": pa.array(pid),
-                        }
-                    )
-
-    p2_cand = q_b.mapInArrow(
-        gen,
-        schema="query_id string, pw double, px double, py double, pz double,"
-        " pid long",
-    )
-    p2_cand = _register_cache(
-        p2_cand.join(pid_salts, "pid").select(
-            "query_id", "pw", "px", "py", "pz", "part_key"
-        ),
-        cache_registry,
-    )
-    # ONE builder job: _split_heavy_groups' count-collect fills the p1
-    # cache (upstream) + p2_cand cache, yields the probed part_keys as an
-    # InSet pushdown AND splits heavy cogroups query-side (measured at
-    # sf2: per-task kernel time varied 5 s -> 90 s at ~uniform candidate
-    # counts, so ONE task was the wall-clock floor at any core count)
-    cand_g, corp_probe = _split_heavy_groups(
-        spark, p2_cand, corpus, layout, split_target=_KNN_SPLIT_TARGET
-    )
-
     def p2_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return _PAIR_ANG_EMPTY
@@ -1507,32 +1518,18 @@ def _so3_knn_on_index(
             }
         )
 
-    gcols = _group_cols(cand_g)
-    p2 = (
-        cand_g.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(p2_group, schema="query_id string, pose_id string, ang double")
+    p2_cand = _so3_candidates(index, q_b, k)
+    # ONE builder job: the split planner's count collect fills the p1
+    # caches (upstream) + the p2_cand cache, yields the probed part_keys
+    # as an InSet pushdown AND splits heavy cogroups query-side
+    p2_cand, p2 = _second_phase(
+        spark, p2_cand, corpus, layout.part_rows, p2_group,
+        "query_id string, pose_id string, ang double", index._caches,
+        _KNN_SPLIT_TARGET,
     )
-
-    # re-rank ONLY queries phase 2 touched; a phase-2 probe may re-hit a
-    # pose phase 1 saw from the other sign, so dedupe by min ang first
-    affected = F.broadcast(p2_cand.select("query_id").distinct())
-    untouched = p1_topk.join(affected, "query_id", "left_anti").select(
-        "query_id", "pose_id", "ang", F.col("rank").cast("int")
-    )
-    touched = (
-        p1_topk.join(affected, "query_id", "left_semi")
-        .select("query_id", "pose_id", "ang")
-        .unionByName(p2)
-        .groupBy("query_id", "pose_id")
-        .agg(F.min("ang").alias("ang"))
-    )
-    reranked = (
-        touched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "pose_id", "ang", F.col("rank").cast("int"))
-    )
-    return untouched.unionByName(reranked)
+    # a phase-2 probe may re-hit a pose phase 1 saw from the other sign,
+    # so the re-rank dedupes by min ang first
+    return _rerank_tail(p1_topk, p2_cand, p2, k, "pose_id", "ang", dedupe=True)
 
 
 def so3_radius_join(
@@ -1558,172 +1555,22 @@ def so3_radius_join(
     EXACT libm angle filters the final pairs, so the float padding can
     only add work, never wrong rows.  One-shot convenience over
     :class:`So3Index.radius_join`."""
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=4)
-    corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows)
-    return _so3_radius_on_index(spark, corpus, layout, queries, r)
+    idx = So3Index._unpersisted(spark, poses, level, max_cell_rows, n_poses_hint)
+    return _so3_radius_on_index(idx, queries, r)
 
 
-def _split_heavy_groups(spark, cand, corpus, layout, split_target=4_000_000):
-    """ONE collect over the cached candidate side: per-partition candidate
-    counts fill the cache, yield the probed part_keys for the InSet
-    pushdown AND drive BATCH-ADAPTIVE cogroup splitting.  A dense
-    partition receiving both many probing rows and many poses would hand
-    ONE cogroup task queries*poses candidate pairs (measured: single-task
-    stragglers serialized the se3 sf1 radius run for minutes).  Heavy
-    groups split QUERY-side into ceil(work / split_target) sub-keys
-    (gsalt); only their corpus rows replicate via a broadcast explode, so
-    shuffle volume grows only by the heavy tail's split factor.  Returns
-    (cand + gsalt, probed corpus + gsalt) — group on (part_key, gsalt)."""
-    crows = cand.groupBy("part_key").count().collect()
-    keys = [int(r_["part_key"]) for r_ in crows]
-    pc = layout.p_counts
-    psn = layout.p_salt_n
-    works: list[tuple[int, int, int]] = []
-    for r_ in crows:
-        k_ = int(r_["part_key"])
-        pid = k_ >> SALT_BITS
-        # part_key is (pid, salt): a salted partition's poses are divided
-        # across its salt_n keys, so per-GROUP pose count is pc/salt_n
-        # (ceil) — estimating with the full pc overestimated work by up to
-        # salt_n and replicated corpus rows for groups needing no split
-        ppg = -(-int(pc[pid]) // max(int(psn[pid]), 1))
-        works.append((k_, int(r_["count"]), int(r_["count"]) * ppg))
-    # adaptive target: the static split_target bounds PER-TASK work, but a
-    # workload of few hot groups can still leave most of the cluster idle
-    # (event-log measurement, E=4x8 local-cluster: the phase-2 cogroup ran
-    # 9-14 tasks with max-task ~= stage wall at every cluster size).  Aim
-    # for ~3 waves of defaultParallelism tasks when total work justifies
-    # it; never finer than split_target/64 (every split replicates the
-    # group's corpus rows once more through the broadcast explode), and
-    # never coarser than the static target.
-    par = max(1, spark.sparkContext.defaultParallelism)
-    total_work = sum(w for _, _, w in works)
-    tgt = min(
-        split_target,
-        max(total_work // (3 * par), max(split_target // 64, 1)),
-    )
-    splits: dict[int, int] = {}
-    for k_, cnt, work in works:
-        s_ = min(256, max(1, -(-work // tgt)))
-        # keep >=64 candidate rows per subtask — finer buys no balance
-        # and multiplies corpus-side tree builds
-        s_ = min(s_, max(1, cnt // 64))
-        if s_ > 1:
-            splits[k_] = s_
-    base_probe = _probe_filter(spark, corpus, keys)
-    if not splits:
-        # NO gsalt column: grouping stays on part_key alone, so the
-        # cached corpus partitioning satisfies the cogroup's distribution
-        # and the probed corpus rows are NOT re-shuffled (round-6 — a
-        # (part_key, gsalt) key invalidated the cache's hash(part_key)
-        # layout even when every gsalt was the constant 0); callers group
-        # by _group_cols(cand)
-        return cand, base_probe
-    # shared fan-out mechanics (gsalt attach + broadcast-explode probe
-    # replication + the dtype-parity assert that guards against silent
-    # cogroup mispairing): engine._apply_group_splits — only the split
-    # DECISION above is pose-specific
-    return _apply_group_splits(spark, cand, base_probe, splits)
-
-
-def _group_cols(cand: DataFrame) -> list[str]:
-    """Cogroup keys for a (cand, probe) pair from _split_heavy_groups:
-    (part_key, gsalt) when splits exist, part_key alone otherwise (which
-    lets the cached corpus partitioning satisfy the distribution)."""
-    return ["part_key", "gsalt"] if "gsalt" in cand.columns else ["part_key"]
-
-
-def _so3_radius_on_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    layout: PoseLayout,
-    queries: DataFrame,
-    r: float,
-    cache_registry: list[DataFrame] | None = None,
-) -> DataFrame:
-    # mirror the kNN paths: one-shot callers drain the global registry at
-    # entry so repeated radius joins never accumulate pinned intermediates;
-    # index-owned callers pass self._caches (drained by idx.unpersist())
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sign = canon_sign_sql()
+def _so3_radius_on_index(index: So3Index, queries: DataFrame, r: float) -> DataFrame:
+    # one-shot callers drain the global registry at entry so repeated
+    # radius joins never accumulate pinned intermediates; index-owned
+    # callers drain their own (and idx.unpersist() releases it)
+    _release_registry(index._caches)
     ccols = list(CCOLS)
     r = float(r)
     # padded chord: superset admission; the exact libm angle decides below
     chord = float(np.sqrt(max(2.0 - 2.0 * np.cos(r), 0.0)) * (1.0 + 1e-12) + 1e-15)
-    qc = (
-        queries.filter(_finite_pred(QCOLS))
-        .select(
-            "query_id",
-            *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
-        )
-        .repartition(shuffle_n)
+    cand = _so3_candidates(
+        index, index._queries(queries).withColumn("bound", F.lit(chord))
     )
-    pid_salts = _pid_salts(spark, layout)
-
-    bc = _cached(
-        layout,
-        ("so3rad_bc", _session_key(spark)),
-        lambda: spark.sparkContext.broadcast(
-            (*_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
-             *_f32_outward(layout.p_lo, layout.p_hi),
-             layout.p_start,
-             *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start)
-        ),
-    )
-
-    def gen(batches):
-        lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start = bc.value
-        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
-        for rb in batches:
-            if rb.num_rows == 0 or len(p_lo) == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
-            chunk = max(256, 8_000_000 // max(len(g_lo), 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P4 = C4[sl]
-                b = np.full(len(P4), chord)
-                for sgn in (1.0, -1.0):
-                    if sgn < 0:
-                        rows = np.nonzero(~(b < P4[:, 0]))[0]
-                    else:
-                        rows = np.arange(len(P4))
-                    if len(rows) == 0:
-                        continue
-                    qi, pid = _partition_candidates(sgn * P4[rows], b[rows], la)
-                    if len(qi) == 0:
-                        continue
-                    pr = sgn * P4[rows[qi]]
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "query_id": pc.take(
-                                qid_arr, pa.array(rows[qi] + c0)
-                            ),
-                            "pw": pa.array(pr[:, 0]),
-                            "px": pa.array(pr[:, 1]),
-                            "py": pa.array(pr[:, 2]),
-                            "pz": pa.array(pr[:, 3]),
-                            "pid": pa.array(pid),
-                        }
-                    )
-
-    cand = qc.mapInArrow(
-        gen,
-        schema="query_id string, pw double, px double, py double, pz double,"
-        " pid long",
-    ).join(pid_salts, "pid").select("query_id", "pw", "px", "py", "pz", "part_key")
-    # cache + ONE collect (counts): round 3 computed the admission gen
-    # TWICE (probe-keys broadcast + cogroup left side); the collect fills
-    # the cache, drives the InSet pushdown AND the heavy-group split
-    cand = _register_cache(cand, cache_registry)
-    cand, corp_probe = _split_heavy_groups(spark, cand, corpus, layout)
 
     def radius_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -1745,11 +1592,13 @@ def _so3_radius_on_index(
             }
         )
 
-    gcols = _group_cols(cand)
-    hits = (
-        cand.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(radius_group, schema="query_id string, pose_id string, ang double")
+    # cache + ONE collect (counts): round 3 computed the admission gen
+    # TWICE (probe-keys broadcast + cogroup left side); the collect fills
+    # the cache, drives the InSet pushdown AND the heavy-group split
+    _, hits = _second_phase(
+        index.spark, cand, index.corpus, index.layout.part_rows, radius_group,
+        "query_id string, pose_id string, ang double", index._caches,
+        _RADIUS_SPLIT_TARGET,
     )
     # |dot(+-q, p)| is bit-identical, so both probes report the SAME ang
     # for a double-hit pose: a plain distinct dedupes exactly
@@ -1775,40 +1624,29 @@ def _se3_layout(poses, b3, level, max_cell_rows):
     )
 
 
-class Se3Index:
-    """Build-once / query-many SE(3) index: refinement-salted corpus
-    persisted PRE-PARTITIONED on the translation-grid part_key (same
-    layout as GeoIndex/So3Index) — repeat batches shuffle only the
-    candidate side."""
+class Se3Index(_PoseIndex):
+    """SE(3) index: the adaptive 3-D leaf grid over translation (data-
+    derived bounds), carrying per-leaf rotation bboxes as side
+    statistics."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        poses: DataFrame,
-        level: int | None = None,
-        max_cell_rows: int = 16384,
-        n_poses_hint: int | None = None,
-    ):
-        self.spark = spark
-        if level is None:
-            n = n_poses_hint if n_poses_hint is not None else poses.count()
-            level = level_for_poses(n, dims=3)
-        self.level = level
+    _DIMS = 3
+
+    def _keyed(self, poses, level, max_cell_rows) -> None:
         self.bounds = _trans_bounds(poses)
-        b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in self.bounds]
-        self.b3 = b3
-        self.layout = _se3_layout(poses, b3, level, max_cell_rows)
-        self.leaf_expr = leaf_key_sql(list(TCOLS), b3, self.layout)
-        self.corpus = (
-            _salted(poses, spark, self.layout, self.leaf_expr, "pose_id")
-            .select("pose_id", *QCOLS, *TCOLS, "part_key")
-            .repartition(
-                int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
-            )
-            .persist()
+        self.b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in self.bounds]
+        self.layout = _se3_layout(poses, self.b3, level, max_cell_rows)
+        self.leaf_expr = leaf_key_sql(list(TCOLS), self.b3, self.layout)
+        self.corpus = _salted(
+            poses, self.spark, self.layout, self.leaf_expr, "pose_id"
+        ).select("pose_id", *QCOLS, *TCOLS, "part_key")
+
+    def _queries(self, queries: DataFrame) -> DataFrame:
+        """Finite queries spread over the shuffle width."""
+        return (
+            queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
+            .select("query_id", *QCOLS, *TCOLS)
+            .repartition(int(self.spark.conf.get("spark.sql.shuffle.partitions")))
         )
-        self.corpus.count()  # materialize
-        self._caches: list[DataFrame] = []
 
     def knn_join(
         self,
@@ -1817,30 +1655,7 @@ class Se3Index:
         rot_weight: float = 1.0,
         trans_weight: float = 1.0,
     ) -> DataFrame:
-        return _se3_knn_on_index(
-            self.spark, self.corpus, self.layout, queries, k,
-            rot_weight, trans_weight, self.b3, self.leaf_expr,
-            cache_registry=self._caches,
-        )
-
-
-    def lineage(self) -> DataFrame:
-        """Per-partition lineage metrics (north_rule: cell id, row counts,
-        bounds per partition) — driver-side from the layout, no Spark job:
-        (pid, n_leaves, n_rows, salt_n, per-dim bbox)."""
-        lay = self.layout
-        d = lay.p_lo.shape[1]
-        pdf = pd.DataFrame(
-            {
-                "pid": np.arange(lay.n_partitions, dtype=np.int64),
-                "n_leaves": np.diff(lay.p_start).astype(np.int64),
-                "n_rows": lay.p_counts,
-                "salt_n": lay.p_salt_n,
-                **{f"lo_{j}": lay.p_lo[:, j] for j in range(d)},
-                **{f"hi_{j}": lay.p_hi[:, j] for j in range(d)},
-            }
-        )
-        return self.spark.createDataFrame(pdf)
+        return _se3_knn_on_index(self, queries, k, rot_weight, trans_weight)
 
     def radius_join(
         self,
@@ -1849,14 +1664,118 @@ class Se3Index:
         rot_weight: float = 1.0,
         trans_weight: float = 1.0,
     ) -> DataFrame:
-        return _se3_radius_on_index(
-            self.spark, self.corpus, self.layout, queries, r,
-            rot_weight, trans_weight, cache_registry=self._caches,
-        )
+        return _se3_radius_on_index(self, queries, r, rot_weight, trans_weight)
 
-    def unpersist(self) -> None:
-        _release_registry(self._caches)
-        self.corpus.unpersist()
+
+def _se3_candidates(
+    index: Se3Index, rows: DataFrame, rw: float, tw: float, k: int = 0
+) -> DataFrame:
+    """rows (query_id, qw..qz, tx..tz, bound [, hk, home_pid]) -> candidate
+    (query_id, qw..qz, tx..tz, part_key): every partition whose compound
+    lower bound ``tw * d_trans + rw * d_rot`` is within ``bound`` (see
+    :func:`_se3_partition_candidates`).  Shared by both joins the way
+    :func:`_so3_candidates` is (home leaf key ``hk``, home pid)."""
+    spark, layout = index.spark, index.layout
+    bc = _cached(
+        layout,
+        ("se3_bc", _session_key(spark)),
+        lambda: spark.sparkContext.broadcast(
+            (
+                *_f32_leaf_pack(layout),
+                *_f32_outward(layout.p_lo, layout.p_hi),
+                *_f32_pair(layout.p_slo, layout.p_shi),
+                layout.p_start,
+                layout.g_counts,
+                *_f32_outward(layout.g_lo, layout.g_hi),
+                *_f32_pair(layout.g_slo, layout.g_shi),
+                layout.g_start,
+            )
+        ),
+    )
+    knn = "home_pid" in rows.columns
+    rot_diam = rw * (np.pi / 2.0)
+    vmin_a = np.array([lo for lo, _ in index.b3])
+    vspan_a = np.array([span for _, span in index.b3])
+
+    def gen(batches):
+        (lo, hi, slo, shi,
+         p_lo, p_hi, p_slo, p_shi, p_start,
+         g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = bc.value
+        G = len(g_counts)
+        la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
+              g_lo, g_hi, g_slo, g_shi, g_start)
+        for rb in batches:
+            if rb.num_rows == 0 or G == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            qid_arr = tbl.column("query_id").chunk(0)
+            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
+            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
+            QR = Qraw * canon_sign_np(Qraw)[:, None]
+            given = _pa_np(tbl, "bound")
+            if knn:
+                home = tbl.column("home_pid").to_numpy(zero_copy_only=False)
+                hk = tbl.column("hk").to_numpy(zero_copy_only=False)
+                n_leaf = (np.int64(1) << (hk >> LVL_SHIFT)).astype(np.int64)
+            # chunk on the GROUP matrix (partition + leaf stages are
+            # pair-expanded — never dense)
+            chunk = max(256, 8_000_000 // max(G, 1))
+            for c0 in range(0, rb.num_rows, chunk):
+                sl = slice(c0, min(c0 + chunk, rb.num_rows))
+                P3 = T[sl]
+                b = given[sl].copy()
+                sel = np.arange(len(P3))
+                home_sel = None
+                if knn:
+                    nb = np.nonzero(~np.isfinite(b))[0]
+                    if len(nb) > 0:
+                        # fallback count-bound at GROUP granularity (home
+                        # had < k poses): compound upper bound — union-box
+                        # dmax covers every member pose, rotation term from
+                        # group rotation bboxes when carried, else angular
+                        # diameter
+                        _, dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)
+                        if rw > 0.0 and g_slo is not None:
+                            ub = tw * dmax + rw * _rot_ub(QR[sl][nb], g_slo, g_shi)
+                        else:
+                            ub = tw * dmax + rot_diam
+                        b[nb] = _count_bound(ub, g_counts, k)
+                    # home-edge early exit in COMPOUND units against the
+                    # query's OWN leaf cell boundary (level-aware width)
+                    edge = tw * _grid_home_edge(P3, vmin_a, vspan_a, n_leaf[sl])
+                    sel = np.nonzero(~(b < edge))[0]
+                    if len(sel) == 0:
+                        continue
+                    home_sel = home[sl][sel]
+                # rotation-aware admission: tw*d_trans_lb + rw*d_rot_lb
+                # <= bound (round-3 was translation-only — rotation-
+                # dominant weights degraded it toward admit-everything)
+                qi, pid = _se3_partition_candidates(
+                    P3[sel], QR[sl][sel], b[sel], la, tw, rw,
+                    home_pid=home_sel,
+                )
+                if len(qi) == 0:
+                    continue
+                g = np.asarray(sel[qi]) + c0
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "query_id": pc.take(qid_arr, pa.array(g)),
+                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
+                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
+                        "pid": pa.array(pid),
+                    }
+                )
+
+    return (
+        rows.mapInArrow(
+            gen,
+            schema="query_id string, "
+            + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
+            + ", pid long",
+        )
+        .join(_pid_salts(spark, layout), "pid")
+        .drop("pid")
+    )
 
 
 def se3_radius_join(
@@ -1882,112 +1801,28 @@ def se3_radius_join(
     with trans_weight == 0 everything is admitted — correct, dense), and
     the EXACT libm compound distance makes the final cut.  One-shot
     convenience over :class:`Se3Index.radius_join`."""
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=3)
-    bounds = _trans_bounds(poses)
-    b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in bounds]
-    layout = _se3_layout(poses, b3, level, max_cell_rows)
-    leaf_expr = leaf_key_sql(list(TCOLS), b3, layout)
-    corpus = _salted(poses, spark, layout, leaf_expr, "pose_id").select(
-        "pose_id", *QCOLS, *TCOLS, "part_key"
-    )
-    return _se3_radius_on_index(
-        spark, corpus, layout, queries, r, rot_weight, trans_weight
-    )
+    idx = Se3Index._unpersisted(spark, poses, level, max_cell_rows, n_poses_hint)
+    return _se3_radius_on_index(idx, queries, r, rot_weight, trans_weight)
 
 
 def _se3_radius_on_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    layout: PoseLayout,
+    index: Se3Index,
     queries: DataFrame,
     r: float,
     rot_weight: float,
     trans_weight: float,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    # see _so3_radius_on_index: drain at entry, register into the caller's
+    # see _so3_radius_on_index: drain at entry, register into the index's
     # registry so index-owned joins release via idx.unpersist()
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
+    _release_registry(index._caches)
     rw, tw = float(rot_weight), float(trans_weight)
     r = float(r)
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pid_salts = _pid_salts(spark, layout)
-    q = (
-        queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
-        .select("query_id", *QCOLS, *TCOLS)
-        .repartition(shuffle_n)
-    )
-
     # compound-space admission radius (padded superset; exact libm
     # compound distance decides below)
     r_pad = r * (1.0 + 1e-12) + 1e-15
-    bc = _cached(
-        layout,
-        ("se3rad_bc", _session_key(spark)),
-        lambda: spark.sparkContext.broadcast(
-            (
-                *_f32_leaf_pack(layout),
-                *_f32_outward(layout.p_lo, layout.p_hi),
-                *_f32_pair(layout.p_slo, layout.p_shi),
-                layout.p_start,
-                *_f32_outward(layout.g_lo, layout.g_hi),
-                *_f32_pair(layout.g_slo, layout.g_shi),
-                layout.g_start,
-            )
-        ),
+    cand = _se3_candidates(
+        index, index._queries(queries).withColumn("bound", F.lit(r_pad)), rw, tw
     )
-
-    def gen(batches):
-        la = bc.value
-        p_lo = la[4]
-        g_lo = la[9]
-        for rb in batches:
-            if rb.num_rows == 0 or len(p_lo) == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
-            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
-            QR = Qraw * canon_sign_np(Qraw)[:, None]
-            # chunk on the GROUP matrix (partition + leaf stages are
-            # pair-expanded — never dense)
-            chunk = max(256, 8_000_000 // max(len(g_lo), 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P3 = T[sl]
-                b = np.full(len(P3), r_pad)
-                # rotation-aware admission: tw*d_trans_lb + rw*d_rot_lb <= r
-                # (round-3 was translation-only — rotation-dominant weights
-                # degraded it toward admit-everything)
-                qi, pid = _se3_partition_candidates(
-                    P3, QR[sl], b, la, tw, rw
-                )
-                if len(qi) == 0:
-                    continue
-                g = np.asarray(qi) + c0
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid_arr, pa.array(g)),
-                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
-                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
-                        "pid": pa.array(pid),
-                    }
-                )
-
-    cand = q.mapInArrow(
-        gen,
-        schema="query_id string, "
-        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
-        + ", pid long",
-    ).join(pid_salts, "pid").drop("pid")
-    # cache + ONE collect (counts): InSet pushdown + heavy-group split
-    # (see _split_heavy_groups)
-    cand = _register_cache(cand, cache_registry)
-    cand, corp_probe = _split_heavy_groups(spark, cand, corpus, layout)
 
     # embedded-space scan radius: dist = rw*ang + tw*dt >=
     # sqrt((tw*dt)^2 + (rw*chord)^2) = L2 in the 7-D embedding
@@ -2055,13 +1890,11 @@ def _se3_radius_on_index(
             }
         )
 
-    gcols = _group_cols(cand)
-    hits = (
-        cand.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(
-            radius_group, schema="query_id string, pose_id string, dist double"
-        )
+    # cache + ONE collect (counts): InSet pushdown + heavy-group split
+    _, hits = _second_phase(
+        index.spark, cand, index.corpus, index.layout.part_rows, radius_group,
+        "query_id string, pose_id string, dist double", index._caches,
+        _RADIUS_SPLIT_TARGET,
     )
     # a pose lives in exactly one partition, a query row carries exactly
     # one gsalt per admitted partition — no dedupe needed
@@ -2092,19 +1925,8 @@ def se3_knn_join(
     ``rot_weight * pi/2`` diameter slack enters only the fallback for
     queries whose home partition holds fewer than k poses.
     One-shot convenience over :class:`Se3Index` (corpus unpersisted)."""
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=3)
-    bounds = _trans_bounds(poses)
-    b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in bounds]
-    layout = _se3_layout(poses, b3, level, max_cell_rows)
-    leaf_expr = leaf_key_sql(list(TCOLS), b3, layout)
-    corpus = _salted(poses, spark, layout, leaf_expr, "pose_id").select(
-        "pose_id", *QCOLS, *TCOLS, "part_key"
-    )
-    return _se3_knn_on_index(
-        spark, corpus, layout, queries, k, rot_weight, trans_weight, b3, leaf_expr
-    )
+    idx = Se3Index._unpersisted(spark, poses, level, max_cell_rows, n_poses_hint)
+    return _se3_knn_on_index(idx, queries, k, rot_weight, trans_weight)
 
 
 def _make_se3_group(k: int, rw: float, tw: float, carry: bool):
@@ -2156,40 +1978,19 @@ def _make_se3_group(k: int, rw: float, tw: float, carry: bool):
 
 
 def _se3_knn_on_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    layout: PoseLayout,
+    index: Se3Index,
     queries: DataFrame,
     k: int,
     rot_weight: float,
     trans_weight: float,
-    b3: list[tuple[float, float]],
-    leaf_expr: str,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
+    spark, layout, corpus = index.spark, index.layout, index.corpus
+    leaf_expr = index.leaf_expr
+    _release_registry(index._caches)
     rw, tw = float(rot_weight), float(trans_weight)
-    rot_diam = rw * (np.pi / 2.0)
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     leaf_salts = _leaf_salts(spark, layout)
-    pid_salts = _pid_salts(spark, layout)
-    leaf_pid = _cached(
-        layout,
-        ("leaf_pid", _session_key(spark)),
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                _leaf_pid_df(spark, layout), schema="key bigint, pid bigint"
-            )
-        ),
-    )
-
-    q = (
-        queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
-        .select("query_id", *QCOLS, *TCOLS)
-        .repartition(shuffle_n)
-    )
+    q = index._queries(queries)
+    leaf_pid = _leaf_pid(spark, layout)
 
     # ---- phase 1: home-partition probe (all salts) — TRUE compound bound
     q_home = q.withColumn("key", F.expr(leaf_expr))
@@ -2205,17 +2006,7 @@ def _se3_knn_on_index(
         .cogroup(corpus.groupby("part_key"))
         .applyInArrow(_make_se3_group(k, rw, tw, carry=True), schema=carry_schema)
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "pose_id")
-    wq = Window.partitionBy("query_id")
-    p1 = _register_cache(p1, cache_registry)
-    # cache the windowed top-k too (see _so3_knn_on_index): bound_rows and
-    # the untouched/touched branches all read it
-    p1_topk = _register_cache(
-        p1.withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(wq))
-        .filter(F.col("rank") <= k),
-        cache_registry,
-    )
+    p1_topk = _cached_p1_topk(p1, k, "pose_id", "dist", index._caches)
     # the window is ordered by dist, so the rank == least(k, cnt) row's
     # OWN dist IS max(dist) over the top-k — the extra max()-window pass
     # was redundant (round-6)
@@ -2243,132 +2034,15 @@ def _se3_knn_on_index(
     )
 
     # ---- phase 2: partition admission within the compound bound ---------
-    bc = _cached(
-        layout,
-        ("se3knn_bc", _session_key(spark)),
-        lambda: spark.sparkContext.broadcast(
-            (
-                *_f32_leaf_pack(layout),
-                *_f32_outward(layout.p_lo, layout.p_hi),
-                *_f32_pair(layout.p_slo, layout.p_shi),
-                layout.p_start,
-                layout.g_counts,
-                *_f32_outward(layout.g_lo, layout.g_hi),
-                *_f32_pair(layout.g_slo, layout.g_shi),
-                layout.g_start,
-            )
-        ),
+    p2_cand = _se3_candidates(index, q_b, rw, tw, k)
+    # ONE builder job: the split planner's count collect fills both caches
+    # + InSet probe pushdown AND splits heavy cogroups query-side
+    p2_cand, p2 = _second_phase(
+        spark, p2_cand, corpus, layout.part_rows,
+        _make_se3_group(k, rw, tw, carry=False),
+        "query_id string, pose_id string, dist double", index._caches,
+        _KNN_SPLIT_TARGET,
     )
-    vmin_a = np.array([lo for lo, _ in b3])
-    vspan_a = np.array([span for _, span in b3])
-
-    def gen(batches):
-        (lo, hi, slo, shi,
-         p_lo, p_hi, p_slo, p_shi, p_start,
-         g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = bc.value
-        G = len(g_counts)
-        la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
-              g_lo, g_hi, g_slo, g_shi, g_start)
-        for rb in batches:
-            if rb.num_rows == 0 or G == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
-            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
-            QR = Qraw * canon_sign_np(Qraw)[:, None]
-            given = _pa_np(tbl, "bound")
-            home = tbl.column("home_pid").to_numpy(zero_copy_only=False)
-            hk = tbl.column("hk").to_numpy(zero_copy_only=False)
-            n_leaf = (np.int64(1) << (hk >> LVL_SHIFT)).astype(np.int64)
-            chunk = max(256, 8_000_000 // max(G, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P3 = T[sl]
-                b = given[sl].copy()
-                nb = np.nonzero(~np.isfinite(b))[0]
-                if len(nb) > 0:
-                    # fallback count-bound at GROUP granularity (home had
-                    # < k poses): compound upper bound — union-box dmax
-                    # covers every member pose, rotation term from group
-                    # rotation bboxes when carried, else angular diameter
-                    dmin, dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)
-                    if rw > 0.0 and g_slo is not None:
-                        ub = tw * dmax + rw * _rot_ub(QR[sl][nb], g_slo, g_shi)
-                    else:
-                        ub = tw * dmax + rot_diam
-                    order = np.argsort(ub, axis=1, kind="stable")
-                    cum = np.cumsum(g_counts[order], axis=1)
-                    need = np.argmax(cum >= k, axis=1)
-                    enough = cum[:, -1] >= k
-                    need = np.where(enough, need, G - 1)
-                    rr = np.arange(len(need))
-                    b[nb] = np.where(
-                        enough,
-                        np.take_along_axis(ub, order, axis=1)[rr, need],
-                        np.inf,
-                    )
-                # home-edge early exit in COMPOUND units against the
-                # query's OWN leaf cell boundary (level-aware width)
-                edge = tw * _grid_home_edge(P3, vmin_a, vspan_a, n_leaf[sl])
-                alive = ~(b < edge)
-                rows = np.nonzero(alive)[0]
-                if len(rows) == 0:
-                    continue
-                qi, pid = _se3_partition_candidates(
-                    P3[rows], QR[sl][rows], b[rows], la, tw, rw,
-                    home_pid=home[sl][rows],
-                )
-                if len(qi) == 0:
-                    continue
-                g = np.asarray(rows[qi]) + c0
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid_arr, pa.array(g)),
-                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
-                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
-                        "pid": pa.array(pid),
-                    }
-                )
-
-    p2_cand = q_b.mapInArrow(
-        gen,
-        schema="query_id string, "
-        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
-        + ", pid long",
-    )
-    p2_cand = _register_cache(
-        p2_cand.join(pid_salts, "pid").drop("pid"), cache_registry
-    )
-    # ONE builder job: _split_heavy_groups' count-collect fills both
-    # caches + InSet probe pushdown AND splits heavy cogroups query-side
-    # (see _so3_knn_on_index — the sf2 straggler measurement)
-    cand_g, corp_probe = _split_heavy_groups(
-        spark, p2_cand, corpus, layout, split_target=_KNN_SPLIT_TARGET
-    )
-    gcols = _group_cols(cand_g)
-    p2 = (
-        cand_g.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(
-            _make_se3_group(k, rw, tw, carry=False),
-            schema="query_id string, pose_id string, dist double",
-        )
-    )
-
     # no dedupe needed: a pose lives in exactly one partition — home poses
     # only in phase 1, others only in phase 2 (single probe point)
-    affected = F.broadcast(p2_cand.select("query_id").distinct())
-    untouched = (
-        p1_topk.join(affected, "query_id", "left_anti")
-        .select("query_id", "pose_id", "dist", F.col("rank").cast("int"))
-    )
-    reranked = (
-        p1_topk.join(affected, "query_id", "left_semi")
-        .select("query_id", "pose_id", "dist")
-        .unionByName(p2)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "pose_id", "dist", F.col("rank").cast("int"))
-    )
-    return untouched.unionByName(reranked)
+    return _rerank_tail(p1_topk, p2_cand, p2, k, "pose_id", "dist")

@@ -30,3 +30,27 @@ def sf0001_fixtures():
     from sparkkd import synth
 
     return synth.ensure_fixtures("sf0.001")
+
+
+@pytest.fixture
+def force_group_splits(monkeypatch):
+    """Returns force(): from then on the shared second-phase split planner
+    (engine._split_heavy_cogroups, used by all six metric joins) splits
+    every group it can — target 1, >= 2 candidate rows per subgroup.
+    force() returns the per-planner-call list of whether the gsalt fan-out
+    actually ran, so a test can prove it did not silently stay unsplit."""
+    from sparkkd import engine
+
+    orig = engine._split_heavy_cogroups
+    fanned: list[bool] = []
+
+    def planner(spark_, cand, corpus, part_rows, split_target, min_rows_per_split=64):
+        c, p = orig(spark_, cand, corpus, part_rows, 1, min_rows_per_split=2)
+        fanned.append("gsalt" in c.columns)
+        return c, p
+
+    def force() -> list[bool]:
+        monkeypatch.setattr(engine, "_split_heavy_cogroups", planner)
+        return fanned
+
+    return force

@@ -107,5 +107,14 @@ def test_bucketed_radius_uses_index_registry(spark, data, tmp_path_factory):
         assert sentinel in engine._ONESHOT_CACHES
         assert sentinel.storageLevel.useMemory  # still persisted
         assert len(idx._caches) >= 1
+        # the shared GeoIndex lifecycle releases the index's intermediates
+        # (the MEMORY_AND_DISK candidate cache would stay pinned otherwise)
+        # and never drops the table
+        pinned = list(idx._caches)
+        idx.unpersist()
+        assert idx._caches == []
+        assert not any(df.storageLevel.useMemory for df in pinned)
+        assert spark.catalog.tableExists("sparkkd_regtest_radius")
+        assert idx.knn_join(queries.limit(5), k=2).count() == 10
     finally:
         engine._release_registry(engine._ONESHOT_CACHES)

@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from sparkkd import cells, engine
+from sparkkd import bucketstore, cells, engine
 
 pytestmark = pytest.mark.spark
 
@@ -205,10 +205,11 @@ def test_probe_filter_plan_shape(spark):
     assert engine._probe_filter(spark, df, []).count() == 0
 
 
-def test_empty_corpus_and_empty_queries(spark):
+def test_empty_corpus_and_empty_queries(spark, tmp_path):
     """A zero-row corpus or a zero-row query frame must produce an EMPTY
     result, not a schema-inference crash (the createDataFrame sites ship
-    explicit schemas; salt offset math handles len 0)."""
+    explicit schemas; salt offset math handles len 0) — for the one-shot
+    joins and the bucket-stored index alike."""
     rng = np.random.default_rng(3)
     img_pdf = pd.DataFrame(
         {
@@ -225,6 +226,11 @@ def test_empty_corpus_and_empty_queries(spark):
     assert engine.knn_join(spark, img, q.limit(0), k=3, n_images_hint=20).count() == 0
     assert engine.radius_join(spark, img.limit(0), q, r=2.0, n_images_hint=0).count() == 0
     assert engine.radius_join(spark, img, q.limit(0), r=2.0, n_images_hint=20).count() == 0
+    bidx = bucketstore.save_geo_index(
+        spark, img.limit(0), "t_empty_geoidx", tmp_path, n_images_hint=0
+    )
+    assert bidx.knn_join(q, k=3).count() == 0
+    assert bidx.radius_join(q, 2.0).count() == 0
 
 
 def test_nan_query_drops_without_damage(spark):

@@ -261,46 +261,45 @@ def test_geoindex_no_corpus_exchange(spark, tables):
         idx.unpersist()
 
 
-def test_radius_join_forced_heavy_split_identical(spark, tables, monkeypatch):
-    """Round-6 heavy-cogroup split regression: forcing every radius
-    cogroup to split query-side (tiny split target) must return exactly
-    the same pair set as the effectively-unsplit default — each (query,
-    cell-salt) pair is evaluated exactly once under any gsalt fan-out,
-    and carry_xy coordinates survive the split unchanged."""
-    r = 3.0
-    base = (
-        engine.radius_join(spark, tables["images"], tables["queries"], r=r)
-        .toPandas()
-        .sort_values(["query_id", "image_id"])
-        .reset_index(drop=True)
-    )
-    orig = engine._split_heavy_cogroups
-    saw_gsalt = {}
+def test_radius_join_forced_heavy_split_identical(spark, tables, force_group_splits):
+    """Heavy-cogroup split regression for the planar joins: forcing every
+    second-phase cogroup to split query-side (the shared planner at
+    target 1) must return exactly the same rows as the default run — for
+    the radius join (each (query, cell-salt) pair is evaluated exactly
+    once under any gsalt fan-out, and carry_xy coordinates survive the
+    split unchanged) and for kNN phase 2 with and without max_radius."""
 
-    def forced(spark_, cand, corpus, stats, split_target=4_000_000, **kw):
-        c, p = orig(
-            spark_, cand, corpus, stats,
-            split_target=128, min_rows_per_split=2,
-        )
-        saw_gsalt["yes"] = "gsalt" in c.columns
-        return c, p
+    def runs():
+        return [
+            (
+                engine.radius_join(
+                    spark, tables["images"], tables["queries"], r=3.0, carry_xy=True
+                )
+                .toPandas()
+                .sort_values(["query_id", "image_id"])
+                .reset_index(drop=True)
+            ),
+            *(
+                engine.knn_join(
+                    spark, tables["images"], tables["queries"], k=8, max_radius=mr
+                )
+                .toPandas()
+                .sort_values(["query_id", "rank"])
+                .reset_index(drop=True)
+                for mr in (float("inf"), 6.0)
+            ),
+        ]
 
-    monkeypatch.setattr(engine, "_split_heavy_cogroups", forced)
-    got = (
-        engine.radius_join(
-            spark, tables["images"], tables["queries"], r=r, carry_xy=True
-        )
-        .toPandas()
-        .sort_values(["query_id", "image_id"])
-        .reset_index(drop=True)
-    )
-    # the forced run must actually have exercised the gsalt fan-out —
+    base = runs()
+    fanned = force_group_splits()
+    forced = runs()
+    # every join must actually have exercised the gsalt fan-out —
     # otherwise this test silently degrades to the unsplit path
-    assert saw_gsalt.get("yes") is True
-    assert len(got) == len(base)
-    assert (got["query_id"].to_numpy() == base["query_id"].to_numpy()).all()
-    assert (got["image_id"].to_numpy() == base["image_id"].to_numpy()).all()
-    assert (got["dist"].to_numpy() == base["dist"].to_numpy()).all()
+    assert fanned == [True, True, True]
+    for b, f in zip(base, forced):
+        assert len(b) > 0
+        pd.testing.assert_frame_equal(b, f, check_exact=True)
+    got = forced[0]
     # carried coordinates reproduce the pair distance exactly as computed
     d = np.sqrt((got.qx - got.ix) ** 2 + (got.qy - got.iy) ** 2)
     assert np.allclose(d.to_numpy(), got["dist"].to_numpy(), rtol=0, atol=0)

@@ -397,15 +397,15 @@ def test_leaf_broadcast_budget_invariance(spark, pose_data, monkeypatch):
         assert len(b) > 0
 
 
-def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
+def test_knn_p2_heavy_group_split_identity(spark, pose_data, force_group_splits):
     """Round 5: kNN phase-2 cogroups split query-side when estimated work
-    (candidates x partition poses) exceeds _KNN_SPLIT_TARGET — measured at
-    sf2, unsplit per-task kernel time varied 5 s -> 90 s at ~uniform
+    (candidates x partition poses) exceeds the kNN split target — measured
+    at sf2, unsplit per-task kernel time varied 5 s -> 90 s at ~uniform
     candidate counts, making one task the stage wall at any core count.
     Query-side splitting is exact (every subgroup sees the partition's
     full corpus; the rerank dedupes by (query, pose)), so forcing EVERY
-    group to split (target=1) must be bit-identical to no split
-    (target=huge)."""
+    group through the shared planner's gsalt fan-out must be
+    bit-identical to the default run."""
     poses, queries, ppdf, _ = pose_data
 
     def both():
@@ -422,16 +422,16 @@ def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
         )
         return knn, sknn
 
-    monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 10**18)
     unsplit = both()
-    monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 1)
+    fanned = force_group_splits()
     forced = both()
+    assert fanned == [True, True]
     for u, f in zip(unsplit, forced):
-        pd.testing.assert_frame_equal(u, f)
+        pd.testing.assert_frame_equal(u, f, check_exact=True)
         assert len(u) > 0
 
 
-def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
+def test_radius_heavy_group_split_identity(spark, pose_data, force_group_splits):
     """The RADIUS twin of the kNN split-identity test.  Regression: the
     split explode map was built by createDataFrame without a schema, so a
     non-Arrow session inferred bigint for the int32 gsalt — the cogroup
@@ -456,14 +456,10 @@ def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
         )
         return rad, srad
 
-    orig = so3engine._split_heavy_groups
-
-    def forced(spark_, cand, corpus, layout, split_target=4_000_000):
-        return orig(spark_, cand, corpus, layout, split_target=1)
-
     unsplit = both()
-    monkeypatch.setattr(so3engine, "_split_heavy_groups", forced)
+    fanned = force_group_splits()
     split = both()
+    assert fanned == [True, True]
     for u, f in zip(unsplit, split):
-        pd.testing.assert_frame_equal(u, f)
+        pd.testing.assert_frame_equal(u, f, check_exact=True)
         assert len(u) > 0
