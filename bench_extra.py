@@ -126,7 +126,8 @@ def sec_embdup(spark):
     from sparkkd import analytics, datapipe
     from sparkkd.engine import _release_registry, _ONESHOT_CACHES
 
-    rng = np.random.default_rng(11)
+    seed = 11
+    rng = np.random.default_rng(seed)
     g, m, extra = 1_000, 50, 50_000
     base = rng.normal(size=(g, 16))
     dup = np.repeat(base, m, axis=0)
@@ -134,7 +135,9 @@ def sec_embdup(spark):
     M = np.vstack([dup, uniq]).astype(np.float32)
     ids = np.arange(len(M), dtype=np.int64)
     pdf = pd.DataFrame({"vec_id": ids, "embedding": list(map(list, M))})
-    p = Path("/dev/shm/sparkkd-embdup.parquet")
+    # the fixture is keyed by every parameter that shapes it, so changed
+    # parameters never reuse a stale file
+    p = Path(f"/dev/shm/sparkkd-embdup-g{g}-m{m}-x{extra}-s{seed}.parquet")
     if not p.exists():
         import pyarrow as pa
         import pyarrow.parquet as pq

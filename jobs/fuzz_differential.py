@@ -11,7 +11,10 @@ rot-only / trans-only) — and asserting exact agreement (row set and
 float-exact distances; rank compared via distance multisets so ties in
 id order never false-positive).
 
-Usage: python jobs/fuzz_differential.py [N_TRIALS] [SEED]
+Usage: python jobs/fuzz_differential.py [N_TRIALS] [SEED] [FAMILIES]
+FAMILIES is a comma-separated subset of the family names (the fuzz_*
+functions without their prefix, e.g. ``geo,pose``); trials cycle through
+the selected families in order (default: all of them).
 Prints one line per trial and a final summary; exits nonzero on any
 mismatch with a full repro dump (seed + config).
 """
@@ -35,6 +38,7 @@ from sparkkd import cells, engine, so3engine
 
 N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 60
 SEED = int(sys.argv[2]) if len(sys.argv) > 2 else 20260818
+FAMILIES = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 
 
 def _coords(rng, n, flavor):
@@ -203,10 +207,15 @@ def fuzz_pose(spark, rng, trial):
             ).toPandas()
             val = got.ang.to_numpy()
         else:
+            # a finite max_radius on some trials: queries whose home rows
+            # all lie beyond it take the out-of-radius route
+            mr = float(rng.uniform(0.05, 1.2)) if rng.integers(0, 2) else float("inf")
+            cfg["max_radius"] = mr
             got = (
-                index.knn_join(queries, k=k) if via_index else
+                index.knn_join(queries, k=k, max_radius=mr) if via_index else
                 so3engine.so3_knn_join(
-                    spark, poses, queries, k=k, max_cell_rows=mcr, n_poses_hint=n
+                    spark, poses, queries, k=k, max_cell_rows=mcr,
+                    n_poses_hint=n, max_radius=mr,
                 )
             ).toPandas()
             val = got.ang.to_numpy()
@@ -264,18 +273,23 @@ def fuzz_pose(spark, rng, trial):
         assert not missing, (cfg, missing[:5])
         assert len(got) <= int((d <= r + eps).sum()), cfg
     else:
-        kk = min(k, n)
-        assert len(got) == nq * kk, (cfg, len(got), nq * kk)
-        # exactly kk distinct corpus ids per query
+        # bounded kNN: the kk_q smallest of each query's in-radius
+        # distances (an unbounded join has every distance in radius)
+        mr = cfg.get("max_radius", float("inf"))
+        dm = np.where(d <= mr, d, np.inf)
+        kk_q = np.minimum(k, np.isfinite(dm).sum(axis=1))
+        assert len(got) == int(kk_q.sum()), (cfg, len(got), int(kk_q.sum()))
+        # exactly kk_q distinct corpus ids per query
         per_q = pd.Series(ii).groupby(pd.Series(qi)).nunique()
-        assert len(per_q) == nq and (per_q == kk).all(), cfg
-        # every returned pair is within eps of that query's kth distance
-        kth = np.partition(d, kk - 1, axis=1)[:, kk - 1]
-        assert (d[qi, ii] <= kth[qi] + eps).all(), cfg
-        # multiset of distances per query matches the kk smallest
+        assert (per_q.to_numpy() == kk_q[per_q.index.to_numpy()]).all(), cfg
+        assert len(per_q) == int((kk_q > 0).sum()), cfg
+        # multiset of distances per query matches the kk_q smallest
+        srt = np.sort(dm, axis=1)
         order = np.lexsort((ii, d[qi, ii], qi))
-        got_vals = d[qi, ii][order].reshape(nq, kk)
-        want_vals = np.sort(np.partition(d, kk - 1, axis=1)[:, :kk], axis=1)
+        got_vals = d[qi, ii][order]
+        want_vals = np.concatenate(
+            [srt[j, : kk_q[j]] for j in range(nq)] + [np.empty(0)]
+        )
         assert np.allclose(got_vals, want_vals, rtol=0.0, atol=1e-10), cfg
     return cfg
 
@@ -985,6 +999,12 @@ def main() -> None:
              fuzz_asof, fuzz_snapshot, fuzz_pip, fuzz_jaccard,
              fuzz_interval, fuzz_split, fuzz_dbscan, fuzz_embdbscan,
              fuzz_labelstats]
+    if FAMILIES is not None:
+        by_name = {f.__name__.removeprefix("fuzz_"): f for f in kinds}
+        unknown = sorted(set(FAMILIES) - set(by_name))
+        if unknown:
+            sys.exit(f"unknown families {unknown}; choose from {sorted(by_name)}")
+        kinds = [by_name[f] for f in FAMILIES]
     for t in range(N_TRIALS):
         cfg = kinds[t % len(kinds)](spark, rng, t)
         print(f"[{t}] OK {json.dumps(cfg)}", flush=True)
@@ -997,7 +1017,8 @@ def main() -> None:
         gc.collect()
         if t % 8 == 7:
             spark.sparkContext._jvm.System.gc()
-    print(f"ALL {N_TRIALS} TRIALS PASSED (seed={SEED})")
+    fams = ",".join(FAMILIES) if FAMILIES is not None else "all"
+    print(f"ALL {N_TRIALS} TRIALS PASSED (seed={SEED}, families={fams})")
 
 
 if __name__ == "__main__":

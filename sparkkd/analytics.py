@@ -290,6 +290,11 @@ def embedding_dbscan(
     # embedding_near_dup hardcodes vec_id as the id column: rename the
     # caller's id_col so the detector and the labels agree (ADVICE r5 —
     # previously a non-default id_col silently produced wrong noise rows).
+    if id_col not in embeddings.columns:
+        raise ValueError(
+            f"id_col={id_col!r} is not a column of the embeddings frame"
+            f" (columns: {embeddings.columns})"
+        )
     if id_col != "vec_id":
         if "vec_id" in embeddings.columns:
             raise ValueError(

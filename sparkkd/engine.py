@@ -16,11 +16,17 @@ whole cells before any shuffle row is produced.
 
 All six metric joins (planar here, SO(3)/SE(3) in ``sparkkd.so3engine``;
 kNN and radius) share ONE second phase, in the "shared second phase"
-section below: a per-space generator emits (query row, part_key)
-candidates, ``_second_phase`` caches them, plans heavy-group splits from
-one count collect, probes only the touched part_keys and runs the space's
-cogroup kernel; kNN joins end in ``_rerank_tail``.  ``GeoIndex._build`` is
-the one planar corpus builder (index, one-shot joins, bucketed index).
+section below: a frame of (query row, part_key) candidates, which
+``_second_phase`` caches, plans heavy-group splits from with one count
+collect, probes only the touched part_keys with and runs the space's
+cogroup kernel over; kNN joins end in ``_rerank_tail``.  Each space has
+ONE admission function (``_cell_admit`` here) and two callers: a radius
+join's ``mapInArrow`` generator, and a kNN join's phase-1 home-probe
+kernel, which emits each query's phase-2 candidates from its own kth
+distance in the same pass — a kNN join runs two Python stages, its two
+cogroups.  ``GeoIndex._build`` is the one planar corpus builder (index,
+one-shot joins, bucketed index); the index's stats broadcast is built
+once, lazily, and destroyed by ``unpersist``.
 
 Skew handling is explicit (north_rule): cells whose row count exceeds
 ``max_cell_rows`` are salted into ``ceil(count/max_cell_rows)`` sub-trees;
@@ -48,14 +54,15 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import cells, kernel
 
 
-def _pa_np(tbl: pa.Table, name: str) -> np.ndarray:
-    """float64 numpy view/copy of an Arrow table column."""
+def _pa_np(tbl: pa.Table | pa.RecordBatch, name: str) -> np.ndarray:
+    """float64 numpy view/copy of an Arrow table / batch column."""
     return tbl.column(name).to_numpy(zero_copy_only=False)
 
 
@@ -130,6 +137,40 @@ def _probe_filter(spark: SparkSession, df: DataFrame, keys) -> DataFrame:
         )
     )
     return df.join(kdf, "part_key", "left_semi")
+
+
+def _session_key(spark: SparkSession) -> str:
+    """Stable per-context cache key: the SparkContext's applicationId.
+    id(spark) is NOT safe here: a new session object can reuse a stopped
+    session's address and the cache would serve broadcasts bound to a dead
+    SparkContext — so a context without an applicationId raises."""
+    app = spark.sparkContext.applicationId
+    if not app:
+        raise RuntimeError("SparkContext has no applicationId to key caches by")
+    return app
+
+
+def _cached(owner, key: tuple[str, str], build):
+    """Build-once cache of driver-side derived objects (broadcast frames
+    and variables) on an index or layout, keyed (name, _session_key): a
+    build-once index pays createDataFrame/broadcast once instead of on
+    every join call.  Inserting a key drops the entries stored under any
+    other applicationId — they are bound to a stopped context."""
+    c = owner.__dict__.setdefault("_runtime_cache", {})
+    if key not in c:
+        for stale in [k_ for k_ in c if k_[1] != key[1]]:
+            del c[stale]
+        c[key] = build()
+    return c[key]
+
+
+def _drop_cached(owner) -> None:
+    """Destroy the owner's cached broadcast variables and forget every
+    cached entry (index unpersist; a later join rebuilds lazily)."""
+    c = owner.__dict__.pop("_runtime_cache", {})
+    for v in c.values():
+        if isinstance(v, Broadcast):
+            v.destroy()
 
 
 def release_caches() -> None:
@@ -526,104 +567,108 @@ def _count_bound(dmax: np.ndarray, counts: np.ndarray, k: int) -> np.ndarray:
     )
 
 
-def _cell_candidates(
-    spark: SparkSession, queries: DataFrame, stats: CellStats, k: int = 0
-) -> DataFrame:
-    """queries (query_id, x, y, bound [, home_key]) -> (query_id, x, y, key)
-    candidate pairs: the cells whose bbox min-distance is <= the row's
-    ``bound`` — the cross-cell ``shouldTraverse``
-    (``src/_kdtree_median.hpp:136-138``), vectorized over query batches
-    against broadcast cell stats.  Shared by both joins: radius rows carry
-    ``bound = r``; kNN phase-2 rows carry the TRUE home-cell kth distance
-    and their ``home_key`` (fully probed in phase 1, skipped here), and a
-    still-inf bound falls back to :func:`_count_bound` over k."""
-    g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
-
-    bc = spark.sparkContext.broadcast(
-        (
-            stats.keys, stats.counts,
-            stats.min_x, stats.min_y, stats.max_x, stats.max_y,
-            g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
-        )
+def _cell_bc(index: GeoIndex):
+    """The index's ONE broadcast of its cell stats + coarse groups (built
+    lazily, destroyed by ``unpersist``), read by the fused phase-1 kNN
+    kernel and the radius generator alike."""
+    stats = index.stats
+    return _cached(
+        index,
+        ("cell_bc", _session_key(index.spark)),
+        lambda: index.spark.sparkContext.broadcast(
+            (
+                stats.keys, stats.counts,
+                stats.min_x, stats.min_y, stats.max_x, stats.max_y,
+                *_coarse_groups(stats),
+            )
+        ),
     )
-    knn = "home_key" in queries.columns
+
+
+def _cell_admit(arrs, px, py, bound, k: int = 0, home=None):
+    """Yield (row, cell) index arrays: the cells whose bbox min-distance
+    is <= each row's ``bound`` — the cross-cell ``shouldTraverse``
+    (``src/_kdtree_median.hpp:136-138``), vectorized over row chunks
+    against the ``_cell_bc`` arrays (group boxes first, members only for
+    passing groups).  kNN rows pass ``home = (home cell key, home edge)``:
+    a non-finite bound falls back to :func:`_count_bound` over k, a row
+    whose bound is STRICTLY inside its home grid cell exits (every point
+    of every other cell is >= edge away; strict '<' keeps exact ties, an
+    outside point at dist == bound could still displace the kth by id
+    order), and the home cell — fully probed in phase 1 — is skipped."""
+    (
+        keys, counts, mnx, mny, mxx, mxy,
+        gmnx, gmny, gmxx, gmxy, gorder, gstart,
+    ) = arrs
+    if len(keys) == 0:
+        return
+    chunk = max(256, 8_000_000 // max(len(gmnx), 1))
+    for c0 in range(0, len(px), chunk):
+        rows = np.arange(c0, min(c0 + chunk, len(px)))
+        b = bound[rows]
+        if home is not None:
+            nb = np.nonzero(~np.isfinite(b))[0]
+            if len(nb) > 0:
+                # count-bound only for the (few) rows lacking a phase-1
+                # bound — full member sweep for just those rows
+                dmax = cells.bbox_max_dist(
+                    px[rows[nb]][:, None], py[rows[nb]][:, None],
+                    mnx[None, :], mny[None, :], mxx[None, :], mxy[None, :],
+                )
+                b[nb] = _count_bound(dmax, counts, k)
+            live = ~(b < home[1][rows])
+            rows, b = rows[live], b[live]
+        qx, qy = px[rows], py[rows]
+        # level 1: group boxes
+        adm_g = cells.bbox_min_dist(
+            qx[:, None], qy[:, None],
+            gmnx[None, :], gmny[None, :], gmxx[None, :], gmxy[None, :],
+        ) <= b[:, None]
+        out_qi: list[np.ndarray] = []
+        out_ci: list[np.ndarray] = []
+        for g in np.nonzero(adm_g.any(axis=0))[0]:
+            rg = np.nonzero(adm_g[:, g])[0]
+            mem = gorder[gstart[g] : gstart[g + 1]]
+            adm = cells.bbox_min_dist(
+                qx[rg][:, None], qy[rg][:, None],
+                mnx[mem][None, :], mny[mem][None, :],
+                mxx[mem][None, :], mxy[mem][None, :],
+            ) <= b[rg][:, None]
+            if home is not None:
+                adm &= keys[mem][None, :] != home[0][rows[rg]][:, None]
+            qi_l, ci_l = np.nonzero(adm)
+            if len(qi_l) > 0:
+                out_qi.append(rows[rg[qi_l]])
+                out_ci.append(mem[ci_l])
+        if out_qi:
+            yield np.concatenate(out_qi), np.concatenate(out_ci)
+
+
+def _cell_candidates(index: GeoIndex, queries: DataFrame, r: float) -> DataFrame:
+    """Radius candidates: queries (query_id, x, y) -> (query_id, x, y,
+    part_key) for every salt of every cell within ``r`` (mapInArrow: the
+    candidate table is output-sized, so it is built with Arrow take/array
+    calls — no pandas object-string round trip)."""
+    bc = _cell_bc(index)
 
     def gen(batches):
-        # mapInArrow: the candidate table is output-sized (one row per
-        # admitted (query, cell) pair) — building it as Arrow take/array
-        # calls skips the pandas object-string round trip both ways
-        (
-            keys, counts, mnx, mny, mxx, mxy,
-            gmnx, gmny, gmxx, gmxy, gorder, gstart,
-        ) = bc.value
-        C = len(keys)
-        G_ = len(gmnx)
+        arrs = bc.value
         for rb in batches:
-            if rb.num_rows == 0 or C == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid = tbl.column("query_id").chunk(0)
-            qx = _pa_np(tbl, "x")
-            qy = _pa_np(tbl, "y")
-            given = _pa_np(tbl, "bound")
-            home = (
-                tbl.column("home_key").to_numpy(zero_copy_only=False)
-                if knn
-                else None
-            )
-            chunk = max(256, 8_000_000 // max(G_, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                px, py = qx[sl], qy[sl]
-                gb = given[sl]
-                bound = gb.copy()
-                nb = np.nonzero(~np.isfinite(gb))[0] if knn else ()
-                if len(nb) > 0:
-                    # count-bound only for the (few) rows lacking a phase-1
-                    # bound — full member sweep for just those rows
-                    dmax = cells.bbox_max_dist(
-                        px[nb][:, None], py[nb][:, None],
-                        mnx[None, :], mny[None, :], mxx[None, :], mxy[None, :],
-                    )
-                    bound[nb] = _count_bound(dmax, counts, k)
-                # level 1: group boxes
-                dmin_g = cells.bbox_min_dist(
-                    px[:, None], py[:, None],
-                    gmnx[None, :], gmny[None, :], gmxx[None, :], gmxy[None, :],
-                )
-                adm_g = dmin_g <= bound[:, None]
-                out_qi: list[np.ndarray] = []
-                out_ci: list[np.ndarray] = []
-                for g in np.nonzero(adm_g.any(axis=0))[0]:
-                    rows_g = np.nonzero(adm_g[:, g])[0]
-                    mem = gorder[gstart[g] : gstart[g + 1]]
-                    dmin = cells.bbox_min_dist(
-                        px[rows_g][:, None], py[rows_g][:, None],
-                        mnx[mem][None, :], mny[mem][None, :],
-                        mxx[mem][None, :], mxy[mem][None, :],
-                    )
-                    adm = dmin <= bound[rows_g][:, None]
-                    if home is not None:
-                        adm &= keys[mem][None, :] != home[sl][rows_g][:, None]
-                    qi_l, ci_l = np.nonzero(adm)
-                    if len(qi_l) > 0:
-                        out_qi.append(rows_g[qi_l])
-                        out_ci.append(mem[ci_l])
-                if not out_qi:
-                    continue
-                qi = np.concatenate(out_qi)
-                ci = np.concatenate(out_ci)
+            qx, qy = _pa_np(rb, "x"), _pa_np(rb, "y")
+            for qi, ci in _cell_admit(arrs, qx, qy, np.full(len(qx), r)):
                 yield pa.RecordBatch.from_pydict(
                     {
-                        "query_id": pc.take(qid, pa.array(qi + c0)),
-                        "x": pa.array(qx[qi + c0]),
-                        "y": pa.array(qy[qi + c0]),
-                        "key": pa.array(keys[ci]),
+                        "query_id": pc.take(rb.column("query_id"), pa.array(qi)),
+                        "x": pa.array(qx[qi]),
+                        "y": pa.array(qy[qi]),
+                        "key": pa.array(arrs[0][ci]),
                     }
                 )
 
-    return queries.mapInArrow(
-        gen, schema="query_id string, x double, y double, key long"
+    return (
+        queries.mapInArrow(gen, schema="query_id string, x double, y double, key long")
+        .join(index.part_keys, "key")
+        .select("query_id", "x", "y", "part_key")
     )
 
 
@@ -640,100 +685,131 @@ def _tie_rank(ids) -> np.ndarray:
     return tie
 
 
-def _make_knn_group(
-    k: int,
-    carry_xy: bool = False,
-    max_radius: float = np.inf,
-    emit_rank: bool = False,
-):
+_DDL_TYPES = {
+    pa.string(): "string", pa.float64(): "double", pa.int64(): "long",
+    pa.int32(): "int", pa.bool_(): "boolean",
+}
+
+
+def _ddl(schema: pa.Schema) -> str:
+    """Spark DDL string of an Arrow schema (kernel output schemas)."""
+    return ", ".join(f"{f.name} {_DDL_TYPES[f.type]}" for f in schema)
+
+
+# phase-1 kNN output: result rows carry image_id/dist/rank/final, the
+# query's phase-2 candidate rows carry x/y/key (the other half null)
+_KNN_P1 = pa.schema(
+    [
+        ("query_id", pa.string()), ("image_id", pa.string()),
+        ("dist", pa.float64()), ("rank", pa.int32()), ("final", pa.bool_()),
+        ("x", pa.float64()), ("y", pa.float64()), ("key", pa.int64()),
+    ]
+)
+
+
+def _with_nulls(cols: dict, schema: pa.Schema) -> pa.Table:
+    """Table over ``schema`` from ``cols``; absent columns are all-null."""
+    n = len(next(iter(cols.values())))
+    return pa.table(
+        [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in schema],
+        schema=schema,
+    )
+
+
+def _make_knn_group(k: int, max_radius: float = np.inf, admit=None):
     """Arrow-native cogroup kernel: build a k-d tree over the cell's
     images, run the batched bounded kNN for the cell's candidate queries
     (ties broken by image_id lexicographic rank so the global merge is
     deterministic).  Output rows are assembled with Arrow take/array calls
     — no pandas object-string round trip (guide §4.2).
-    carry_xy=True passes the query coordinates through (lets phase 2 derive
-    its inputs from phase-1 output without re-joining the query table).
     max_radius seeds the admission bound (reference Q2's maxRadius,
     ``src/_kdtree_median.hpp:456-472``).
-    emit_rank=True additionally emits per-query (rank, cnt, final): for a
-    SINGLE-SALT home cell the group holds the query's entire home probe, so
-    rank/cnt are final right here and the corpus-sized window exchange is
-    skipped for those rows (final=false rows — multi-salt cells — still
-    merge through the window)."""
-    empty = {c: _EMPTY_PAIRS.column(c) for c in _EMPTY_PAIRS.column_names}
-    if carry_xy:
-        empty.update(
-            {"x": pa.array([], pa.float64()), "y": pa.array([], pa.float64())}
-        )
-    if emit_rank:
-        empty.update(
-            {
-                "rank": pa.array([], pa.int32()),
-                "cnt": pa.array([], pa.int64()),
-                "final": pa.array([], pa.bool_()),
-                "home_edge": pa.array([], pa.float64()),
-            }
-        )
-    empty_tbl = pa.table(empty)
+
+    admit=None is the phase-2 kernel: (query_id, image_id, dist).
+    admit=<the index's _cell_bc> is the fused phase-1 HOME probe
+    (_KNN_P1).  Its result rows carry the in-group rank and
+    final = (single-salt home): such a group holds the query's entire home
+    probe, so those rows skip the corpus-sized window exchange.  The
+    salt-0 group of each home (an empty home's synthetic group included —
+    its corpus side is empty) also emits the query's phase-2 candidate
+    cells right here: bound = the group's kth distance (any k distinct
+    rows upper-bound the true kth, so a salt's share of a multi-salt home
+    is looser but valid), capped at max_radius; see _cell_admit."""
+    empty_tbl = _EMPTY_PAIRS if admit is None else _KNN_P1.empty_table()
 
     def knn_group(left: pa.Table, right: pa.Table) -> pa.Table:
-        if left.num_rows == 0 or right.num_rows == 0:
+        if left.num_rows == 0 or (right.num_rows == 0 and admit is None):
             return empty_tbl
-        pts = np.column_stack([_pa_np(right, "x"), _pa_np(right, "y")])
-        ids = right.column("image_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(pts)
         qpts = np.column_stack([_pa_np(left, "x"), _pa_np(left, "y")])
-        qi, idx, dist = kernel.knn(tree, qpts, k, tie_key=tie, max_radius=max_radius)
+        qi = idx = np.empty(0, np.int64)
+        dist = np.empty(0, np.float64)
+        ids = _EMPTY_PAIRS.column("image_id")
+        if right.num_rows > 0:
+            ids = right.column("image_id")
+            pts = np.column_stack([_pa_np(right, "x"), _pa_np(right, "y")])
+            tree = kernel.build(pts)
+            qi, idx, dist = kernel.knn(
+                tree, qpts, k, tie_key=_tie_rank(ids), max_radius=max_radius
+            )
         out = {
             "query_id": pc.take(left.column("query_id"), pa.array(qi)),
             "image_id": pc.take(ids, pa.array(idx)),
             "dist": pa.array(dist),
         }
-        if carry_xy:
-            out["x"] = pa.array(qpts[qi, 0])
-            out["y"] = pa.array(qpts[qi, 1])
-        if emit_rank:
-            # kernel output is sorted by (qi, dist, tie): in-group ranks
-            if len(qi) > 0:
-                starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-                lens = np.diff(np.append(starts, len(qi)))
-                out["rank"] = pa.array(
-                    (np.arange(len(qi)) - np.repeat(starts, lens) + 1).astype(
-                        np.int32
-                    )
-                )
-                out["cnt"] = pa.array(np.repeat(lens, lens).astype(np.int64))
-            else:
-                out["rank"] = pa.array([], pa.int32())
-                out["cnt"] = pa.array([], pa.int64())
-            out["final"] = pa.array(
-                np.full(len(qi), left.column("salt_n")[0].as_py() == 1, dtype=bool)
-            )
-            # distance from each query to the nearest edge of its home GRID
-            # cell (decoded from the group's part_key) — phase 2's early
-            # exit: every point of every other cell is >= edge away.  The
-            # 1e-9 deg margin absorbs float rounding between this boundary
-            # arithmetic and the cell-assignment formula.  Computed here in
-            # NumPy because the SQL rendering inlines the nested-CASE key
-            # expression ~15x when Catalyst pushes the filter through the
-            # projection (measured 30 us/row interpreted — vs free here).
-            key = left.column("part_key")[0].as_py() >> SALT_SHIFT
-            lvl = key >> LEVEL_SHIFT
-            n = 1 << lvl
+        if admit is None:
+            return pa.table(out)
+        # kernel output is sorted by (qi, dist, tie): in-group ranks
+        starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]]) if len(qi) else qi
+        lens = np.diff(np.append(starts, len(qi)))
+        out["rank"] = pa.array(
+            (np.arange(len(qi)) - np.repeat(starts, lens) + 1).astype(np.int32)
+        )
+        out["final"] = pa.array(
+            np.full(len(qi), left.column("salt_n")[0].as_py() == 1)
+        )
+        tables = [_with_nulls(out, _KNN_P1)]
+        part_key = left.column("part_key")[0].as_py()
+        if part_key & ((1 << SALT_SHIFT) - 1) == 0:
+            bound = np.full(left.num_rows, np.inf)
+            full = starts[lens >= k]
+            bound[qi[full]] = dist[full + k - 1]
+            # distance from each query to the nearest edge of its home
+            # GRID cell (decoded from the part_key); the 1e-9 deg margin
+            # absorbs float rounding between this boundary arithmetic and
+            # the cell-assignment formula.  Computed here in NumPy: the SQL
+            # rendering inlined the nested-CASE key expression ~15x when
+            # Catalyst pushed the filter through the projection.
+            key = part_key >> SALT_SHIFT
+            n = 1 << (key >> LEVEL_SHIFT)
             cell = key & ((1 << LEVEL_SHIFT) - 1)
             wx, wy = cells.X_SPAN / n, cells.Y_SPAN / n
             lo_x = cells.X_MIN + (cell % n) * wx
             lo_y = cells.Y_MIN + (cell // n) * wy
-            qxv, qyv = qpts[qi, 0], qpts[qi, 1]
-            out["home_edge"] = pa.array(
+            qx, qy = qpts[:, 0], qpts[:, 1]
+            edge = (
                 np.minimum(
-                    np.minimum(qxv - lo_x, lo_x + wx - qxv),
-                    np.minimum(qyv - lo_y, lo_y + wy - qyv),
+                    np.minimum(qx - lo_x, lo_x + wx - qx),
+                    np.minimum(qy - lo_y, lo_y + wy - qy),
                 )
                 - 1e-9
             )
-        return pa.table(out)
+            home = (np.full(left.num_rows, key), edge)
+            arrs = admit.value
+            for rows, ci in _cell_admit(
+                arrs, qx, qy, np.minimum(bound, max_radius), k, home
+            ):
+                tables.append(
+                    _with_nulls(
+                        {
+                            "query_id": pc.take(left.column("query_id"), pa.array(rows)),
+                            "x": pa.array(qx[rows]),
+                            "y": pa.array(qy[rows]),
+                            "key": pa.array(arrs[0][ci]),
+                        },
+                        _KNN_P1,
+                    )
+                )
+        return pa.concat_tables(tables)
 
     return knn_group
 
@@ -981,129 +1057,75 @@ def _knn_join_on_index(
     q = queries.select(
         "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
     ).filter(_FINITE_QUERY)
-    schema = "query_id string, image_id string, dist double"
-    key_expr = stats.key_sql("x", "y")
     # ---- phase 1: probe each query's HOME cell (all salts of it) --------
     # This is the first descent of the reference search: it yields a TRUE
-    # kth-distance bound per query, so phase 2 probes almost nothing.
-    q_home = q.withColumn("key", F.expr(key_expr))
-    p1_cand = q_home.join(part_keys, "key").select(
-        "query_id", "x", "y", "part_key", "salt_n"
+    # kth-distance bound per query, and the kernel emits the query's
+    # phase-2 candidates from it in the same pass.  A query whose home
+    # holds no images rides phase 1 too: the LEFT join routes it to the
+    # synthetic part_key key << SALT_SHIFT, which no corpus row has, and
+    # the kernel (called with an empty corpus side) emits its count-bound
+    # candidates.
+    p1_cand = (
+        q.withColumn("key", F.expr(stats.key_sql("x", "y")))
+        .join(part_keys, "key", "left")
+        .select(
+            "query_id", "x", "y",
+            F.coalesce("part_key", F.col("key") * (1 << SALT_SHIFT)).alias(
+                "part_key"
+            ),
+            F.coalesce("salt_n", F.lit(1)).alias("salt_n"),
+        )
     )
-    p1 = (
+    # p1 feeds the final/merge split AND the phase-2 candidates; cache it
+    # once (fills during the split planner's count collect below — no
+    # separate count() job)
+    p1 = _register_cache(
         p1_cand.groupby("part_key")
         .cogroup(index.img_salted.groupby("part_key"))
         .applyInArrow(
-            _make_knn_group(k, carry_xy=True, max_radius=max_radius, emit_rank=True),
-            schema=schema
-            + ", x double, y double, rank int, cnt long, final boolean,"
-            " home_edge double",
-        )
+            _make_knn_group(k, max_radius=max_radius, admit=_cell_bc(index)),
+            schema=_ddl(_KNN_P1),
+        ),
+        index._caches,
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "image_id")
-    wq = Window.partitionBy("query_id")
-    # p1 feeds the final/merge split, bound rows, the p2 exclusion AND the
-    # final union; cache it once (fills during the p2_cand materialization
-    # below — no separate count() job).
-    p1 = _register_cache(p1, index._caches)
+    res = p1.filter(F.col("key").isNull())
     # single-salt home cells (the overwhelming majority): the kernel's
-    # in-group rank/cnt ARE final — those rows skip the Q-sized window
+    # in-group ranks ARE final — those rows skip the Q-sized window
     # exchange entirely.  Only multi-salt cells merge through the window.
-    p1_final = p1.filter(F.col("final")).drop("final")
-    p1_merge = (
-        p1.filter(~F.col("final"))
-        .drop("rank", "cnt", "final")
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(wq))
-    )
-    # ALSO cache the merged top-k: bound_rows (job A) and the untouched/
-    # touched branches (job B) all consume it — without this cache job B
-    # re-ran the p1 window merge once per branch (2 extra exchanges).
+    cols = ["query_id", "image_id", "dist", "rank"]
+    p1_final = res.filter(F.col("final")).select(*cols)
+    w = Window.partitionBy("query_id").orderBy("dist", "image_id")
+    p1_merge = res.filter(~F.col("final")).withColumn(
+        "rank", F.row_number().over(w)
+    ).select(*cols)
+    # ALSO cache the merged top-k: the re-rank's untouched and touched
+    # branches both consume it — without this cache the final action
+    # re-ran the p1 window merge once per branch.
     p1_topk = _register_cache(
         p1_final.unionByName(p1_merge).filter(F.col("rank") <= k),
         index._caches,
     )
-
-    # ---- phase 2: probe remaining cells within the bound ----------------
-    # Home is always excluded: phase 1 returned min(k, |home|) rows, which
-    # covers the home cell completely in both the cnt>=k and cnt<k cases.
-    # Bound rows come straight from p1_topk: cnt counts SURVIVING candidate
-    # rows (radius-capped in the kernel), so the query's last surviving row
-    # is exactly rank == least(k, cnt) — no extra window needed.  The bound
-    # is the kth distance when cnt >= k, else inf, capped at max_radius.
-    mr = float(max_radius)
-    bound_rows = p1_topk.filter(
-        F.col("rank") == F.least(F.lit(k), F.col("cnt"))
-    ).select(
-        "query_id",
-        "x",
-        "y",
-        F.least(
-            F.when(F.col("cnt") >= k, F.col("dist")).otherwise(
-                F.lit(float("inf"))
-            ),
-            F.lit(mr),
-        ).alias("bound"),
-        F.expr(key_expr).alias("home_key"),
-        "home_edge",
-    )
-    # queries whose home cell holds no images never reach p1: recover them
-    # with a BROADCAST anti join against the (small) part_keys table.
-    # (With a finite max_radius a query CAN also vanish from p1 because all
-    # home-cell points are out of radius — those queries are NOT in
-    # bound_rows; recover them through the same anti join on p1 query ids.)
-    absent = (
-        q_home.join(part_keys, "key", "left_anti")
-        .select(
-            "query_id", "x", "y",
-            F.lit(mr).alias("bound"),
-            F.col("key").alias("home_key"),
-            F.lit(0.0).alias("home_edge"),  # empty home: always probe
-        )
-    )
-    if np.isfinite(mr):
-        emptied = (
-            q_home.join(part_keys, "key", "left_semi")
-            .join(
-                F.broadcast(p1_topk.select("query_id").distinct()),
-                "query_id",
-                "left_anti",
-            )
-            .select(
-                "query_id", "x", "y",
-                F.lit(mr).alias("bound"),
-                F.col("key").alias("home_key"),
-                F.lit(0.0).alias("home_edge"),
-            )
-        )
-        absent = absent.unionByName(emptied)
-    q_b = bound_rows.unionByName(absent)
-    # home-edge early exit (the dominant pruning term at scale — the
-    # O(Q x C) cell sweep otherwise): a query whose bound is STRICTLY
-    # inside its home grid cell cannot be improved by any other cell (all
-    # their points are >= edge away; keys partition space, so other cells'
-    # regions are disjoint even across refinement levels).  Strict '<'
-    # keeps exact tie semantics: an outside point at dist == bound could
-    # still displace the kth by image_id order, so bound == edge probes.
-    q_b = q_b.filter(~(F.col("bound") < F.col("home_edge"))).drop("home_edge")
+    # ---- phase 2: the candidate rows phase 1 emitted ---------------------
     p2_cand = (
-        _cell_candidates(spark, q_b, stats, k)
+        p1.filter(F.col("key").isNotNull())
+        .select("query_id", "x", "y", "key")
         .join(part_keys, "key")
         .select("query_id", "x", "y", "part_key")
     )
     # ONE builder job (round-4, VERDICT #5): the split planner's count
-    # collect materializes the p1_topk cache (upstream) AND the p2_cand
-    # cache as a side effect, and its probed part_keys become an InSet
-    # pushdown on the corpus.  Probing only the touched cells still
-    # matters: without it the whole corpus re-shuffles for a handful of
-    # boundary queries.
+    # collect materializes the p1 cache (upstream) AND the p2_cand cache
+    # as a side effect, and its probed part_keys become an InSet pushdown
+    # on the corpus.  Probing only the touched cells still matters:
+    # without it the whole corpus re-shuffles for a handful of boundary
+    # queries.
     p2_cand, p2 = _second_phase(
         spark, p2_cand, index.img_salted, stats.part_rows,
-        _make_knn_group(k, max_radius=max_radius), schema, index._caches,
+        _make_knn_group(k, max_radius=max_radius),
+        "query_id string, image_id string, dist double", index._caches,
         _KNN_SPLIT_TARGET,
     )
-    # p1_topk/p2_cand stay persisted until the NEXT join call releases them
-    # (they must outlive the lazy returned plan's execution)
+    # p1/p1_topk/p2_cand stay persisted until the NEXT join call releases
+    # them (they must outlive the lazy returned plan's execution)
     return _rerank_tail(p1_topk, p2_cand, p2, k, "image_id", "dist")
 
 
@@ -1260,6 +1282,7 @@ class GeoIndex:
     def unpersist(self) -> None:
         _release_registry(self._caches)
         self.img_salted.unpersist()
+        _drop_cached(self)
 
 
 # ------------------------------------------------------------- radius join
@@ -1294,19 +1317,12 @@ def _radius_join_on_index(
     # spread the vectorized pruning work across the cluster first
     q = (
         queries.select(
-            "query_id",
-            F.col("qlon").alias("x"),
-            F.col("qlat").alias("y"),
-            F.lit(float(r)).alias("bound"),
+            "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
         )
         .filter(_FINITE_QUERY)
         .repartition(_parallelism(spark))
     )
-    cand = (
-        _cell_candidates(spark, q, index.stats)
-        .join(index.part_keys, "key")
-        .select("query_id", "x", "y", "part_key")
-    )
+    cand = _cell_candidates(index, q, float(r))
 
     out_schema = "query_id string, image_id string, dist double"
     if carry_xy:

@@ -10,17 +10,21 @@ SKEW-ADAPTIVE layout:
 
 * **phase 1 (home probe)**: every query probes its own partition first —
   the distributed analogue of the reference's first descent — yielding a
-  TRUE kth-distance bound far tighter than any statistics-only bound;
-* **phase 2**: remaining partitions are admitted against that bound
-  through leaf-cell statistics; queries whose bound is strictly inside
-  their home grid cell (home-edge early exit) skip phase 2 entirely.
+  TRUE kth-distance bound far tighter than any statistics-only bound; the
+  same kernel admits the remaining partitions against that bound through
+  leaf-cell statistics and emits them as the query's phase-2 candidates
+  (queries whose bound is strictly inside their home grid cell — the
+  home-edge early exit — emit none; a query whose home leaf is empty
+  rides a synthetic negative part_key and gets a count bound);
+* **phase 2**: the emitted candidates probe their partitions.
 
-Only the phase-1 probes, candidate generators (``_so3_candidates`` /
-``_se3_candidates``, each shared by its space's kNN phase 2 and radius
-join) and cogroup kernels are pose-specific; the split planner, probe
-filter, cogroup and kNN re-rank tail are the geo engine's shared second
-phase (``engine._second_phase`` / ``engine._rerank_tail``), and both
-indexes share one build / lineage / unpersist lifecycle (``_PoseIndex``).
+Only the phase-1 probes, the admission functions (``_so3_admit`` /
+``_se3_admit``, each called by its space's fused phase-1 kernel and
+radius generator) and cogroup kernels are pose-specific; the split
+planner, probe filter, cogroup and kNN re-rank tail are the geo engine's
+shared second phase (``engine._second_phase`` / ``engine._rerank_tail``),
+and both indexes share one build / lineage / unpersist lifecycle
+(``_PoseIndex``; ``unpersist`` also destroys the layout's broadcasts).
 
 ADAPTIVE LAYOUT (round-3, after sf2 profiling): pruning statistics live at
 LEAF grid cells — a base fine level L everywhere, except inside HOT base
@@ -86,42 +90,20 @@ from .engine import (
     _KNN_SPLIT_TARGET,
     _RADIUS_SPLIT_TARGET,
     SALT_SHIFT,
+    _cached,
     _count_bound,
+    _ddl,
+    _drop_cached,
     _pa_np,
     _register_cache,
     _release_registry,
     _rerank_tail,
     _second_phase,
+    _session_key,
     _tie_rank,
+    _with_nulls,
 )
 
-
-def _layout_cache(layout) -> dict:
-    """Per-layout runtime cache for driver-side derived objects (salt
-    maps, broadcast variables): a build-once index pays createDataFrame/
-    broadcast once instead of on every join call."""
-    c = getattr(layout, "_runtime_cache", None)
-    if c is None:
-        c = {}
-        object.__setattr__(layout, "_runtime_cache", c)
-    return c
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable per-context cache key.  id(spark) is NOT safe here: a new
-    session object can reuse a stopped session's address and the cache
-    would serve broadcasts bound to a dead SparkContext."""
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:
-        return str(id(spark))
-
-
-def _cached(layout, key, build):
-    c = _layout_cache(layout)
-    if key not in c:
-        c[key] = build()
-    return c[key]
 
 SALT_BITS = SALT_SHIFT  # the shared split planner decodes pid = part_key >> SALT_SHIFT
 LVL_SHIFT = 48  # leaf key = (level << LVL_SHIFT) | cell  (cell < 2^(d*10))
@@ -1104,6 +1086,7 @@ class _PoseIndex:
     def unpersist(self) -> None:
         _release_registry(self._caches)
         self.corpus.unpersist()
+        _drop_cached(self.layout)
 
 
 # ------------------------------------------------------------ SO(3) join
@@ -1185,17 +1168,12 @@ def so3_knn_join(
     return _so3_knn_on_index(idx, queries, k, max_radius)
 
 
-def _so3_candidates(index: So3Index, rows: DataFrame, k: int = 0) -> DataFrame:
-    """rows (query_id, cw..cz, bound [, kp, kp_pid, kn_pid]) -> candidate
-    (query_id, pw..pz, part_key): each antipodal probe point against every
-    partition whose member-leaf bboxes come within ``bound`` (chord
-    space).  Shared by both joins: radius rows carry only the padded chord;
-    kNN phase-2 rows carry their home leaf key and both probes' home pids
-    (-1 when unoccupied; probed in phase 1, skipped here), exit early when
-    the bound is inside their own leaf cell, and a still-inf bound falls
-    back to a count bound over k."""
+def _so3_bc(index: So3Index):
+    """The layout's ONE broadcast of its SO(3) admission arrays (f32
+    outward boxes), read by the fused phase-1 kernel and the radius
+    generator alike (destroyed by ``unpersist``)."""
     spark, layout = index.spark, index.layout
-    bc = _cached(
+    return _cached(
         layout,
         ("so3_bc", _session_key(spark)),
         lambda: spark.sparkContext.broadcast(
@@ -1207,116 +1185,130 @@ def _so3_candidates(index: So3Index, rows: DataFrame, k: int = 0) -> DataFrame:
             )
         ),
     )
-    knn = "kp_pid" in rows.columns
-    ccols = list(CCOLS)
+
+
+def _so3_admit(arrs, C4, bound, k: int = 0, home=None):
+    """Yield (row, sign, pid) arrays: each antipodal probe point
+    ``sign * C4[row]`` against every partition whose member-leaf bboxes
+    come within the row's ``bound`` (chord space).  Canonical corpus
+    points all have cw >= 0, so the minus probe is >= cw_q from every
+    point and dies on one compare when the bound is below that.  kNN rows
+    pass ``home = (plus probe's home edge, plus home pid, minus home
+    pid)`` (pids -1 when unoccupied; probed in phase 1, skipped here): a
+    non-finite bound falls back to a count bound over k, and the plus
+    probe exits when its bound is strictly inside its own leaf cell."""
+    (lo, hi, p_lo, p_hi, p_start, g_counts, g_lo, g_hi, g_start) = arrs
+    G = len(g_counts)
+    if G == 0:
+        return
+    la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
+    # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however large
+    # the corpus (G ~ sqrt(P), not P)
+    chunk = max(256, 8_000_000 // G)
+    for c0 in range(0, len(C4), chunk):
+        sl = slice(c0, min(c0 + chunk, len(C4)))
+        P4 = C4[sl]
+        b = bound[sl].copy()
+        homes = (None, None)
+        if home is not None:
+            edge, kp_pid, kn_pid = (h[sl] for h in home)
+            nb = np.nonzero(~np.isfinite(b))[0]
+            if len(nb) > 0:
+                # statistics-only fallback at GROUP granularity: the
+                # union-box dmax still upper-bounds every member, so
+                # walking groups by dmax until g_counts cover k stays a
+                # valid (looser) kth bound — and the dense sweep is
+                # (nb, G), never (nb, leaves)
+                b[nb] = np.minimum(
+                    _count_bound(
+                        _bbox_min_max_dist(P4[nb], g_lo, g_hi)[1], g_counts, k
+                    ),
+                    _count_bound(
+                        _bbox_min_max_dist(-P4[nb], g_lo, g_hi)[1], g_counts, k
+                    ),
+                )
+            homes = (kp_pid, kn_pid)
+        for sgn, hp in zip((1.0, -1.0), homes):
+            if sgn < 0:
+                alive = ~(b < P4[:, 0])
+            elif home is not None:
+                alive = ~(b < edge)
+            else:
+                alive = np.ones(len(P4), dtype=bool)
+            sel = np.nonzero(alive)[0]
+            if len(sel) == 0:
+                continue
+            qi, pid = _partition_candidates(
+                sgn * P4[sel], b[sel], la,
+                home_pid=None if hp is None else hp[sel],
+            )
+            if len(qi) > 0:
+                yield sel[qi] + c0, sgn, pid
+
+
+PCOLS = ("pw", "px", "py", "pz")  # an SO(3) candidate row's probe point
+
+
+def _so3_cand_cols(qids, rows, probe, pid) -> dict:
+    """Arrow columns of SO(3) candidate rows (query_id, pw..pz, pid)."""
+    return {
+        "query_id": pc.take(qids, pa.array(rows)),
+        **{c: pa.array(probe[:, j]) for j, c in enumerate(PCOLS)},
+        "pid": pa.array(pid),
+    }
+
+
+def _with_part_keys(index: _PoseIndex, cand: DataFrame) -> DataFrame:
+    """Expand (..., pid) candidate rows over every salt of the partition."""
+    return cand.join(_pid_salts(index.spark, index.layout), "pid").drop("pid")
+
+
+def _so3_candidates(index: So3Index, queries: DataFrame, chord: float) -> DataFrame:
+    """Radius candidates: canonical queries (query_id, cw..cz) -> (query_id,
+    pw..pz, part_key) for both antipodal probes within ``chord``."""
+    bc = _so3_bc(index)
 
     def gen(batches):
-        (lo, hi, p_lo, p_hi, p_start,
-         g_counts, g_lo, g_hi, g_start) = bc.value
-        G = len(g_counts)
-        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
-        vmin = np.full(4, -1.0)
-        vspan = np.full(4, 2.0)
+        arrs = bc.value
         for rb in batches:
-            if rb.num_rows == 0 or G == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
-            given = _pa_np(tbl, "bound")
-            if knn:
-                kp = tbl.column("kp").to_numpy(zero_copy_only=False)
-                kp_pid = tbl.column("kp_pid").to_numpy(zero_copy_only=False)
-                kn_pid = tbl.column("kn_pid").to_numpy(zero_copy_only=False)
-                n_leaf = (np.int64(1) << (kp >> LVL_SHIFT)).astype(np.int64)
-            # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however
-            # large the corpus (G ~ sqrt(P), not P)
-            chunk = max(256, 8_000_000 // max(G, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P4 = C4[sl]
-                b = given[sl].copy()
-                homes = (None, None)
-                if knn:
-                    nb = np.nonzero(~np.isfinite(b))[0]
-                    if len(nb) > 0:
-                        # statistics-only fallback at GROUP granularity:
-                        # the union-box dmax still upper-bounds every
-                        # member, so walking groups by dmax until g_counts
-                        # cover k stays a valid (looser) kth bound — and
-                        # the dense sweep is (nb, G), never (nb, leaves)
-                        b[nb] = np.minimum(
-                            _count_bound(
-                                _bbox_min_max_dist(P4[nb], g_lo, g_hi)[1],
-                                g_counts, k,
-                            ),
-                            _count_bound(
-                                _bbox_min_max_dist(-P4[nb], g_lo, g_hi)[1],
-                                g_counts, k,
-                            ),
-                        )
-                    # home-edge exit against the query's OWN leaf cell (its
-                    # level encodes the width — refined leaves test tighter)
-                    edge = _grid_home_edge(P4, vmin, vspan, n_leaf[sl])
-                    homes = (kp_pid[sl], kn_pid[sl])
-                for sgn, home in zip((1.0, -1.0), homes):
-                    if sgn < 0:
-                        # canonical corpus points all have cw >= 0: the
-                        # minus probe is >= cw_q from every point
-                        alive = ~(b < P4[:, 0])
-                    elif knn:
-                        alive = ~(b < edge)
-                    else:
-                        alive = np.ones(len(P4), dtype=bool)
-                    sel = np.nonzero(alive)[0]
-                    if len(sel) == 0:
-                        continue
-                    qi, pid = _partition_candidates(
-                        sgn * P4[sel], b[sel], la,
-                        home_pid=None if home is None else home[sel],
-                    )
-                    if len(qi) == 0:
-                        continue
-                    pr = sgn * P4[sel[qi]]
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "query_id": pc.take(
-                                qid_arr, pa.array(sel[qi] + c0)
-                            ),
-                            "pw": pa.array(pr[:, 0]),
-                            "px": pa.array(pr[:, 1]),
-                            "py": pa.array(pr[:, 2]),
-                            "pz": pa.array(pr[:, 3]),
-                            "pid": pa.array(pid),
-                        }
-                    )
+            C4 = np.column_stack([_pa_np(rb, c) for c in CCOLS])
+            for rows, sgn, pid in _so3_admit(arrs, C4, np.full(len(C4), chord)):
+                yield pa.RecordBatch.from_pydict(
+                    _so3_cand_cols(rb.column("query_id"), rows, sgn * C4[rows], pid)
+                )
 
-    return (
-        rows.mapInArrow(
-            gen,
-            schema="query_id string, pw double, px double, py double,"
-            " pz double, pid long",
-        )
-        .join(_pid_salts(spark, layout), "pid")
-        .select("query_id", "pw", "px", "py", "pz", "part_key")
+    schema = "query_id string, " + ", ".join(f"{c} double" for c in PCOLS)
+    return _with_part_keys(
+        index, queries.mapInArrow(gen, schema=schema + ", pid long")
     )
 
 
-def _cached_p1_topk(
+def _p1_split(
     p1: DataFrame, k: int, id_col: str, dist_col: str, registry: list[DataFrame]
-) -> DataFrame:
-    """Cache a pose kNN's phase-1 output AND its windowed top-k (rank,
-    cnt): the bound rows (job A) and the re-rank's untouched/touched
-    branches (job B) all consume it — without the second cache job B
-    re-ran the p1 window merge once per branch."""
+):
+    """Cache a pose kNN's fused phase-1 output and split it: (windowed
+    top-k of its result rows — also cached, the re-rank's untouched and
+    touched branches both consume it —, its phase-2 candidate rows with
+    their part_keys)."""
     p1 = _register_cache(p1, registry)
     w = Window.partitionBy("query_id").orderBy(dist_col, id_col)
-    return _register_cache(
-        p1.withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(Window.partitionBy("query_id")))
+    topk = _register_cache(
+        p1.filter(F.col("pid").isNull())
+        .select("query_id", id_col, dist_col)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k),
         registry,
     )
+    return topk, p1.filter(F.col("pid").isNotNull()).drop(id_col, dist_col)
+
+
+# fused SO(3) phase-1 output: result rows carry pose_id/ang, candidate
+# rows carry the probe point and pid (the other half null)
+_SO3_P1 = pa.schema(
+    [("query_id", pa.string()), ("pose_id", pa.string()), ("ang", pa.float64())]
+    + [(c, pa.float64()) for c in PCOLS]
+    + [("pid", pa.int64())]
+)
 
 
 def _so3_knn_on_index(
@@ -1327,173 +1319,145 @@ def _so3_knn_on_index(
     mr = float(max_radius)
     # chord-space seed for tree pruning (padded superset); the EXACT libm
     # angle filters inside the kernels, so the pad only adds work and the
-    # phase-1 cnt/bound are computed over exactly the radius-admitted rows
+    # phase-1 bounds are computed over exactly the radius-admitted rows
     chord_pad = (
         float(np.sqrt(max(2.0 - 2.0 * np.cos(mr), 0.0)) * (1.0 + 1e-12) + 1e-15)
         if np.isfinite(mr)
         else float("inf")
     )
     ccols = list(CCOLS)
-    qc = index._queries(queries)
-    pos_leaf = index.leaf_expr
-    neg_leaf = leaf_key_sql([f"(- {c})" for c in ccols], _B4, layout)
-    leaf_salts = _leaf_salts(spark, layout)
-    leaf_pid = _leaf_pid(spark, layout)
+    bc = _so3_bc(index)
+    salt_mask = (1 << SALT_BITS) - 1
+    vmin = np.full(4, -1.0)
+    vspan = np.full(4, 2.0)
 
     # ---- phase 1: probe each probe-point's HOME partition (all salts) ---
-    probes = (
-        qc.withColumn("sgn", F.lit(1.0)).withColumn("key", F.expr(pos_leaf))
-    ).unionByName(
-        qc.withColumn("sgn", F.lit(-1.0)).withColumn("key", F.expr(neg_leaf))
+    # The plus probe always rides phase 1: an unoccupied home goes to the
+    # synthetic part_key -1 - leaf key (no corpus row has a negative key),
+    # whose group carries the query to the kernel with an empty corpus
+    # side.  The minus probe's home is almost never occupied (canonical
+    # corpus points have cw >= 0), so it joins only occupied leaves; its
+    # home pid rides on the plus row for exclusion.
+    qk = (
+        index._queries(queries)
+        .withColumn("kp", F.expr(index.leaf_expr))
+        .withColumn("kn", F.expr(leaf_key_sql([f"(- {c})" for c in ccols], _B4, layout)))
+        .join(
+            _leaf_pid(spark, layout)
+            .withColumnRenamed("key", "kn")
+            .withColumnRenamed("pid", "kn_pid"),
+            "kn", "left",
+        )
+        .fillna({"kn_pid": -1})
     )
-    p1_cand = probes.join(leaf_salts, "key").select(
-        "query_id", *ccols, "sgn", "part_key"
+    leaf_salts = _leaf_salts(spark, layout)
+    plus = qk.select(
+        "query_id", *ccols, F.lit(1.0).alias("sgn"), F.col("kp").alias("key"), "kn_pid"
     )
-
-    p1_empty = pa.table(
-        {
-            "query_id": pa.array([], pa.string()),
-            "pose_id": pa.array([], pa.string()),
-            "ang": pa.array([], pa.float64()),
-            "eu": pa.array([], pa.float64()),
-            **{c: pa.array([], pa.float64()) for c in ccols},
-        }
+    minus = qk.select(
+        "query_id", *ccols, F.lit(-1.0).alias("sgn"), F.col("kn").alias("key"), "kn_pid"
+    )
+    p1_cand = (
+        plus.join(leaf_salts, "key", "left")
+        .withColumn("part_key", F.coalesce("part_key", -1 - F.col("key")))
+        .unionByName(minus.join(leaf_salts, "key"))
     )
 
     def p1_group(left: pa.Table, right: pa.Table) -> pa.Table:
         # Arrow-native kernel (guide §4.2): inputs stay Arrow — pose_id /
         # query_id strings never become Python objects; outputs are
         # take()/array() calls
-        if left.num_rows == 0 or right.num_rows == 0:
-            return p1_empty
-        P = np.column_stack([_pa_np(right, c) for c in ccols])
-        ids = right.column("pose_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(P)
+        if left.num_rows == 0:
+            return _SO3_P1.empty_table()
+        qids = left.column("query_id")
         C4 = np.column_stack([_pa_np(left, c) for c in ccols])
-        QP = C4 * _pa_np(left, "sgn")[:, None]
-        qi, idx, eu = kernel.knn(tree, QP, k, tie_key=tie, max_radius=chord_pad)
-        ang = _angular_np(QP[qi], P[idx])
-        if np.isfinite(mr):
-            keep = ang <= mr  # exact libm cut; chord pad only added work
-            qi, idx, ang, eu = qi[keep], idx[keep], ang[keep], eu[keep]
+        sgn = _pa_np(left, "sgn")
+        QP = C4 * sgn[:, None]
+        enc = qids.combine_chunks().dictionary_encode()
+        qcode = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        qi = idx = np.empty(0, np.int64)
+        ang = eu = np.empty(0, np.float64)
+        ids = _PAIR_ANG_EMPTY.column("pose_id")
+        if right.num_rows > 0:
+            P = np.column_stack([_pa_np(right, c) for c in ccols])
+            ids = right.column("pose_id")
+            tie = _tie_rank(ids)
+            tree = kernel.build(P)
+            qi, idx, eu = kernel.knn(tree, QP, k, tie_key=tie, max_radius=chord_pad)
+            ang = _angular_np(QP[qi], P[idx])
+            if np.isfinite(mr):
+                keep = ang <= mr  # exact libm cut; chord pad only added work
+                qi, idx, ang, eu = qi[keep], idx[keep], ang[keep], eu[keep]
         # DEDUPE (query, pose): when BOTH antipodal probes of a query land
         # in this partition (reachable at qw == ±0.0 — the canonical cell
         # of -0.0 equals +0.0's — or any tiny corpus packed into one
         # partition), the same pose appears once per probe.  Without this,
-        # rank/cnt/eumax downstream count duplicates: the top-k window
-        # could keep a duplicate and drop the true kth neighbor, and the
-        # phase-2 bound could undershoot the kth-DISTINCT distance and
-        # prune partitions holding true neighbors.  Keep the min-eu row —
-        # min(|q-p|, |q+p|) is exactly chord(ang), so the kept eu stays a
-        # true upper bound per pose and eumax a true kth bound.  ang is
-        # bit-identical across probes (|dot(±q, p)| is sign-exact in IEEE).
+        # the top-k window could keep a duplicate and drop the true kth
+        # neighbor, and the phase-2 bound could undershoot the kth-DISTINCT
+        # distance and prune partitions holding true neighbors.  Keep the
+        # min-eu row — min(|q-p|, |q+p|) is exactly chord(ang), so the kept
+        # eu stays a true upper bound per pose.  ang is bit-identical
+        # across probes (|dot(±q, p)| is sign-exact in IEEE).
         if len(qi) > 0:
-            qcode = (
-                left.column("query_id")
-                .combine_chunks()
-                .dictionary_encode()
-                .indices.to_numpy(zero_copy_only=False)
-            )
-            pairk = qcode[qi].astype(np.int64) * np.int64(right.num_rows) + idx
+            pairk = qcode[qi] * np.int64(right.num_rows) + idx
             o = np.lexsort((eu, pairk))
             ks = pairk[o]
             firsts = np.ones(len(o), dtype=bool)
             firsts[1:] = ks[1:] != ks[:-1]
             sel = np.sort(o[firsts])
             qi, idx, ang, eu = qi[sel], idx[sel], ang[sel], eu[sel]
-        return pa.table(
+        out = _with_nulls(
             {
-                "query_id": pc.take(left.column("query_id"), pa.array(qi)),
+                "query_id": pc.take(qids, pa.array(qi)),
                 "pose_id": pc.take(ids, pa.array(idx)),
                 "ang": pa.array(ang),
-                "eu": pa.array(eu),
-                **{c: pa.array(C4[qi, j]) for j, c in enumerate(ccols)},
-            }
+            },
+            _SO3_P1,
         )
+        part_key = left.column("part_key")[0].as_py()
+        plus_rows = np.nonzero(sgn > 0)[0]
+        # the plus probe's salt-0 (or synthetic) group emits the query's
+        # candidates for BOTH signs; other groups emit phase-1 rows only
+        if len(plus_rows) == 0 or (part_key >= 0 and part_key & salt_mask):
+            return out
+        # bound: the kth row's OWN eu in (ang, pose_id) order.  eu >=
+        # chord(ang) for every row, so k distinct poses lie within
+        # chord <= eu_k: any pose with ang < ang_k has min-chord <= eu_k,
+        # and the sign achieving the min is admitted.  Tighter than max(eu)
+        # (eu is not monotone in ang when only one probe saw the pose).
+        bq = np.full(len(enc.dictionary), np.inf)
+        if len(qi) > 0:
+            o = np.lexsort((tie[idx], ang, qcode[qi]))
+            qs = qcode[qi][o]
+            starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+            full = starts[np.diff(np.append(starts, len(qs))) >= k]
+            bq[qs[full]] = eu[o][full + k - 1]
+        P4 = C4[plus_rows]
+        leaf = left.column("key").to_numpy(zero_copy_only=False)[plus_rows]
+        home = (
+            # home-edge exit against the probe's OWN leaf cell (its level
+            # encodes the width — refined leaves test tighter)
+            _grid_home_edge(P4, vmin, vspan, np.int64(1) << (leaf >> LVL_SHIFT)),
+            np.full(len(plus_rows), part_key >> SALT_BITS if part_key >= 0 else -1),
+            left.column("kn_pid").to_numpy(zero_copy_only=False)[plus_rows],
+        )
+        tables = [out]
+        bound = np.minimum(bq[qcode[plus_rows]], chord_pad)
+        for rows, s_, pid in _so3_admit(bc.value, P4, bound, k, home):
+            tables.append(
+                _with_nulls(
+                    _so3_cand_cols(qids, plus_rows[rows], s_ * P4[rows], pid),
+                    _SO3_P1,
+                )
+            )
+        return pa.concat_tables(tables)
 
     p1 = (
         p1_cand.groupby("part_key")
         .cogroup(corpus.groupby("part_key"))
-        .applyInArrow(
-            p1_group,
-            schema="query_id string, pose_id string, ang double, eu double,"
-            " cw double, cx double, cy double, cz double",
-        )
+        .applyInArrow(p1_group, schema=_ddl(_SO3_P1))
     )
-    p1_topk = _cached_p1_topk(p1, k, "pose_id", "ang", index._caches)
-
-    # ---- phase 2: bound rows, early exits, partition admission ----------
-    # The kth row's OWN eu is a valid phase-2 bound: eu >= chord(ang) for
-    # every row (min over signs), and any pose with ang < ang_k has
-    # min-chord chord(ang) <= chord(ang_k) <= eu_k, so the sign achieving
-    # the min is admitted.  This is TIGHTER than the old max(eu)-over-
-    # window bound (eu is not monotone in ang when only one probe saw the
-    # pose) and drops one window pass per call (round-6).
-    bound_rows = (
-        p1_topk.filter(F.col("rank") == F.least(F.lit(k), F.col("cnt")))
-        .select(
-            "query_id", *ccols,
-            F.least(
-                F.when(F.col("cnt") >= k, F.col("eu"))
-                .otherwise(F.lit(float("inf"))),
-                F.lit(chord_pad),
-            ).alias("bound"),
-        )
-    )
-    # occupied leaf keys, driver-built (leaf_keys are unique by
-    # construction — no distinct exchange) and cached per layout
-    occ = _cached(
-        layout,
-        ("occ_keys", _session_key(spark)),
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"key": layout.leaf_keys}), schema="key bigint"
-            )
-        ),
-    )
-    qk = qc.withColumn("kp", F.expr(pos_leaf)).withColumn("kn", F.expr(neg_leaf))
-    absent = (
-        qk.join(F.broadcast(occ.withColumnRenamed("key", "kp")), "kp", "left_anti")
-        .join(F.broadcast(occ.withColumnRenamed("key", "kn")), "kn", "left_anti")
-        .select("query_id", *ccols, F.lit(chord_pad).alias("bound"))
-    )
-    if np.isfinite(mr):
-        # with a finite radius a query can ALSO vanish from p1 because all
-        # home-partition poses are out of radius — recover every query with
-        # at least one OCCUPIED home (either probe) that produced no p1 row
-        either = (
-            qk.join(F.broadcast(occ.withColumnRenamed("key", "kp")), "kp", "left_semi")
-            .unionByName(
-                qk.join(
-                    F.broadcast(occ.withColumnRenamed("key", "kn")), "kn", "left_semi"
-                )
-            )
-            .distinct()
-        )
-        emptied = (
-            either.join(
-                F.broadcast(p1_topk.select("query_id").distinct()),
-                "query_id", "left_anti",
-            )
-            .select("query_id", *ccols, F.lit(chord_pad).alias("bound"))
-        )
-        absent = absent.unionByName(emptied)
-    # home pids (-1 when unoccupied) + leaf keys (level decides edge width)
-    q_b = (
-        bound_rows.unionByName(absent)
-        .withColumn("kp", F.expr(pos_leaf))
-        .withColumn("kn", F.expr(neg_leaf))
-        .join(
-            leaf_pid.withColumnRenamed("key", "kp").withColumnRenamed("pid", "kp_pid"),
-            "kp", "left",
-        )
-        .join(
-            leaf_pid.withColumnRenamed("key", "kn").withColumnRenamed("pid", "kn_pid"),
-            "kn", "left",
-        )
-        .fillna({"kp_pid": -1, "kn_pid": -1})
-    )
+    p1_topk, cand = _p1_split(p1, k, "pose_id", "ang", index._caches)
 
     def p2_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -1502,9 +1466,7 @@ def _so3_knn_on_index(
         ids = right.column("pose_id")
         tie = _tie_rank(ids)
         tree = kernel.build(P)
-        QP = np.column_stack(
-            [_pa_np(left, c) for c in ("pw", "px", "py", "pz")]
-        )
+        QP = np.column_stack([_pa_np(left, c) for c in PCOLS])
         qi, idx, _ = kernel.knn(tree, QP, k, tie_key=tie, max_radius=chord_pad)
         ang = _angular_np(QP[qi], P[idx])
         if np.isfinite(mr):
@@ -1518,12 +1480,11 @@ def _so3_knn_on_index(
             }
         )
 
-    p2_cand = _so3_candidates(index, q_b, k)
     # ONE builder job: the split planner's count collect fills the p1
-    # caches (upstream) + the p2_cand cache, yields the probed part_keys
+    # cache (upstream) + the p2_cand cache, yields the probed part_keys
     # as an InSet pushdown AND splits heavy cogroups query-side
     p2_cand, p2 = _second_phase(
-        spark, p2_cand, corpus, layout.part_rows, p2_group,
+        spark, _with_part_keys(index, cand), corpus, layout.part_rows, p2_group,
         "query_id string, pose_id string, ang double", index._caches,
         _KNN_SPLIT_TARGET,
     )
@@ -1568,9 +1529,7 @@ def _so3_radius_on_index(index: So3Index, queries: DataFrame, r: float) -> DataF
     r = float(r)
     # padded chord: superset admission; the exact libm angle decides below
     chord = float(np.sqrt(max(2.0 - 2.0 * np.cos(r), 0.0)) * (1.0 + 1e-12) + 1e-15)
-    cand = _so3_candidates(
-        index, index._queries(queries).withColumn("bound", F.lit(chord))
-    )
+    cand = _so3_candidates(index, index._queries(queries), chord)
 
     def radius_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -1667,16 +1626,11 @@ class Se3Index(_PoseIndex):
         return _se3_radius_on_index(self, queries, r, rot_weight, trans_weight)
 
 
-def _se3_candidates(
-    index: Se3Index, rows: DataFrame, rw: float, tw: float, k: int = 0
-) -> DataFrame:
-    """rows (query_id, qw..qz, tx..tz, bound [, hk, home_pid]) -> candidate
-    (query_id, qw..qz, tx..tz, part_key): every partition whose compound
-    lower bound ``tw * d_trans + rw * d_rot`` is within ``bound`` (see
-    :func:`_se3_partition_candidates`).  Shared by both joins the way
-    :func:`_so3_candidates` is (home leaf key ``hk``, home pid)."""
+def _se3_bc(index: Se3Index):
+    """The layout's ONE broadcast of its SE(3) admission arrays (see
+    :func:`_so3_bc`)."""
     spark, layout = index.spark, index.layout
-    bc = _cached(
+    return _cached(
         layout,
         ("se3_bc", _session_key(spark)),
         lambda: spark.sparkContext.broadcast(
@@ -1692,90 +1646,95 @@ def _se3_candidates(
             )
         ),
     )
-    knn = "home_pid" in rows.columns
-    rot_diam = rw * (np.pi / 2.0)
-    vmin_a = np.array([lo for lo, _ in index.b3])
-    vspan_a = np.array([span for _, span in index.b3])
+
+
+def _se3_admit(arrs, T, QR, bound, rw: float, tw: float, k: int = 0, home=None):
+    """Yield (row, pid) arrays: every partition whose compound lower bound
+    ``tw * d_trans + rw * d_rot`` is within the row's ``bound`` (see
+    :func:`_se3_partition_candidates`; QR canonicalized).  kNN rows pass
+    ``home = (home edge in compound units, home pid)`` (-1 when
+    unoccupied): a non-finite bound falls back to a count bound over k,
+    a row whose bound is strictly inside its own leaf cell exits, and the
+    home partition — probed in phase 1 — is skipped."""
+    (lo, hi, slo, shi,
+     p_lo, p_hi, p_slo, p_shi, p_start,
+     g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = arrs
+    G = len(g_counts)
+    if G == 0:
+        return
+    la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
+          g_lo, g_hi, g_slo, g_shi, g_start)
+    # chunk on the GROUP matrix (partition + leaf stages are pair-expanded
+    # — never dense)
+    chunk = max(256, 8_000_000 // G)
+    for c0 in range(0, len(T), chunk):
+        sl = slice(c0, min(c0 + chunk, len(T)))
+        P3, R = T[sl], QR[sl]
+        b = bound[sl].copy()
+        sel = np.arange(len(P3))
+        home_sel = None
+        if home is not None:
+            nb = np.nonzero(~np.isfinite(b))[0]
+            if len(nb) > 0:
+                # fallback count-bound at GROUP granularity: compound upper
+                # bound — union-box dmax covers every member pose, rotation
+                # term from group rotation bboxes when carried, else the
+                # angular diameter
+                _, dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)
+                if rw > 0.0 and g_slo is not None:
+                    ub = tw * dmax + rw * _rot_ub(R[nb], g_slo, g_shi)
+                else:
+                    ub = tw * dmax + rw * (np.pi / 2.0)
+                b[nb] = _count_bound(ub, g_counts, k)
+            sel = np.nonzero(~(b < home[0][sl]))[0]
+            if len(sel) == 0:
+                continue
+            home_sel = home[1][sl][sel]
+        # rotation-aware admission: tw*d_trans_lb + rw*d_rot_lb <= bound
+        # (round-3 was translation-only — rotation-dominant weights
+        # degraded it toward admit-everything)
+        qi, pid = _se3_partition_candidates(
+            P3[sel], R[sel], b[sel], la, tw, rw, home_pid=home_sel
+        )
+        if len(qi) > 0:
+            yield sel[qi] + c0, pid
+
+
+def _se3_cand_cols(qids, rows, Qraw, T, pid) -> dict:
+    """Arrow columns of SE(3) candidate rows (query_id, qw..qz, tx..tz,
+    pid)."""
+    return {
+        "query_id": pc.take(qids, pa.array(rows)),
+        **{c: pa.array(Qraw[rows, j]) for j, c in enumerate(QCOLS)},
+        **{c: pa.array(T[rows, j]) for j, c in enumerate(TCOLS)},
+        "pid": pa.array(pid),
+    }
+
+
+def _se3_candidates(
+    index: Se3Index, queries: DataFrame, rw: float, tw: float, r: float
+) -> DataFrame:
+    """Radius candidates: queries (query_id, qw..qz, tx..tz) -> the same
+    columns + part_key for every partition within compound distance r."""
+    bc = _se3_bc(index)
 
     def gen(batches):
-        (lo, hi, slo, shi,
-         p_lo, p_hi, p_slo, p_shi, p_start,
-         g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = bc.value
-        G = len(g_counts)
-        la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
-              g_lo, g_hi, g_slo, g_shi, g_start)
+        arrs = bc.value
         for rb in batches:
-            if rb.num_rows == 0 or G == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
-            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
+            Qraw = np.column_stack([_pa_np(rb, c) for c in QCOLS])
+            T = np.column_stack([_pa_np(rb, c) for c in TCOLS])
             QR = Qraw * canon_sign_np(Qraw)[:, None]
-            given = _pa_np(tbl, "bound")
-            if knn:
-                home = tbl.column("home_pid").to_numpy(zero_copy_only=False)
-                hk = tbl.column("hk").to_numpy(zero_copy_only=False)
-                n_leaf = (np.int64(1) << (hk >> LVL_SHIFT)).astype(np.int64)
-            # chunk on the GROUP matrix (partition + leaf stages are
-            # pair-expanded — never dense)
-            chunk = max(256, 8_000_000 // max(G, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P3 = T[sl]
-                b = given[sl].copy()
-                sel = np.arange(len(P3))
-                home_sel = None
-                if knn:
-                    nb = np.nonzero(~np.isfinite(b))[0]
-                    if len(nb) > 0:
-                        # fallback count-bound at GROUP granularity (home
-                        # had < k poses): compound upper bound — union-box
-                        # dmax covers every member pose, rotation term from
-                        # group rotation bboxes when carried, else angular
-                        # diameter
-                        _, dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)
-                        if rw > 0.0 and g_slo is not None:
-                            ub = tw * dmax + rw * _rot_ub(QR[sl][nb], g_slo, g_shi)
-                        else:
-                            ub = tw * dmax + rot_diam
-                        b[nb] = _count_bound(ub, g_counts, k)
-                    # home-edge early exit in COMPOUND units against the
-                    # query's OWN leaf cell boundary (level-aware width)
-                    edge = tw * _grid_home_edge(P3, vmin_a, vspan_a, n_leaf[sl])
-                    sel = np.nonzero(~(b < edge))[0]
-                    if len(sel) == 0:
-                        continue
-                    home_sel = home[sl][sel]
-                # rotation-aware admission: tw*d_trans_lb + rw*d_rot_lb
-                # <= bound (round-3 was translation-only — rotation-
-                # dominant weights degraded it toward admit-everything)
-                qi, pid = _se3_partition_candidates(
-                    P3[sel], QR[sl][sel], b[sel], la, tw, rw,
-                    home_pid=home_sel,
-                )
-                if len(qi) == 0:
-                    continue
-                g = np.asarray(sel[qi]) + c0
+            for rows, pid in _se3_admit(arrs, T, QR, np.full(len(T), r), rw, tw):
                 yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid_arr, pa.array(g)),
-                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
-                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
-                        "pid": pa.array(pid),
-                    }
+                    _se3_cand_cols(rb.column("query_id"), rows, Qraw, T, pid)
                 )
 
-    return (
-        rows.mapInArrow(
-            gen,
-            schema="query_id string, "
-            + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
-            + ", pid long",
-        )
-        .join(_pid_salts(spark, layout), "pid")
-        .drop("pid")
+    schema = (
+        "query_id string, "
+        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
+        + ", pid long"
     )
+    return _with_part_keys(index, queries.mapInArrow(gen, schema=schema))
 
 
 def se3_radius_join(
@@ -1820,9 +1779,7 @@ def _se3_radius_on_index(
     # compound-space admission radius (padded superset; exact libm
     # compound distance decides below)
     r_pad = r * (1.0 + 1e-12) + 1e-15
-    cand = _se3_candidates(
-        index, index._queries(queries).withColumn("bound", F.lit(r_pad)), rw, tw
-    )
+    cand = _se3_candidates(index, index._queries(queries), rw, tw, r_pad)
 
     # embedded-space scan radius: dist = rw*ang + tw*dt >=
     # sqrt((tw*dt)^2 + (rw*chord)^2) = L2 in the 7-D embedding
@@ -1929,7 +1886,16 @@ def se3_knn_join(
     return _se3_knn_on_index(idx, queries, k, rot_weight, trans_weight)
 
 
-def _make_se3_group(k: int, rw: float, tw: float, carry: bool):
+# fused SE(3) phase-1 output: result rows carry pose_id/dist, candidate
+# rows carry the query pose and pid (the other half null)
+_SE3_P1 = pa.schema(
+    [("query_id", pa.string()), ("pose_id", pa.string()), ("dist", pa.float64())]
+    + [(c, pa.float64()) for c in (*QCOLS, *TCOLS)]
+    + [("pid", pa.int64())]
+)
+
+
+def _make_se3_group(k: int, rw: float, tw: float, admit=None):
     """Cogroup kernel: branch-and-bound compound search via
     kernel.knn_compound — a k-d tree over the partition's TRANSLATIONS
     prunes with the trans_weight * distToLeaf lower bound, so per-query
@@ -1937,42 +1903,70 @@ def _make_se3_group(k: int, rw: float, tw: float, carry: bool):
     Selection runs on SIMD arccos padded by a relative 1e-12 margin;
     final values are libm-rescored from the returned (ldot, et), so the
     downstream window (ordered by the EXACT dist) decides oracle-exactly.
-    carry=True passes the query pose through (phase 1 feeds bound rows)."""
 
-    empty = {
-        "query_id": pa.array([], pa.string()),
-        "pose_id": pa.array([], pa.string()),
-        "dist": pa.array([], pa.float64()),
-    }
-    if carry:
-        empty.update({c: pa.array([], pa.float64()) for c in (*QCOLS, *TCOLS)})
-    empty_tbl = pa.table(empty)
+    admit=(the index's _se3_bc, grid vmin, grid vspan) makes it the fused
+    phase-1 HOME probe (_SE3_P1): the salt-0 (or synthetic, empty-home)
+    group also emits each query's phase-2 candidates, bounded by the
+    group's kth compound distance (any k distinct poses bound the true
+    kth); see _se3_admit."""
+    empty_tbl = _PAIR_DIST_EMPTY if admit is None else _SE3_P1.empty_table()
+    salt_mask = (1 << SALT_BITS) - 1
 
     def se3_group(left: pa.Table, right: pa.Table) -> pa.Table:
-        if left.num_rows == 0 or right.num_rows == 0:
+        if left.num_rows == 0 or (right.num_rows == 0 and admit is None):
             return empty_tbl
         QR = np.column_stack([_pa_np(left, c) for c in QCOLS])
         QT = np.column_stack([_pa_np(left, c) for c in TCOLS])
-        PR = np.column_stack([_pa_np(right, c) for c in QCOLS])
-        PT = np.column_stack([_pa_np(right, c) for c in TCOLS])
-        ids = right.column("pose_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(PT)
-        qi, idx, ldot, et = kernel.knn_compound(
-            tree, QT, QR, PR, k, rw, tw, tie_key=tie
-        )
+        qi = idx = np.empty(0, np.int64)
+        dist = np.empty(0, np.float64)
+        ids = _PAIR_DIST_EMPTY.column("pose_id")
+        if right.num_rows > 0:
+            PR = np.column_stack([_pa_np(right, c) for c in QCOLS])
+            PT = np.column_stack([_pa_np(right, c) for c in TCOLS])
+            ids = right.column("pose_id")
+            tie = _tie_rank(ids)
+            tree = kernel.build(PT)
+            qi, idx, ldot, et = kernel.knn_compound(
+                tree, QT, QR, PR, k, rw, tw, tie_key=tie
+            )
+            # FINAL values via libm acos — oracle-bit-exact
+            dist = rw * acos_exact(ldot) + tw * et
         out = {
             "query_id": pc.take(left.column("query_id"), pa.array(qi)),
             "pose_id": pc.take(ids, pa.array(idx)),
-            # FINAL values via libm acos — oracle-bit-exact
-            "dist": pa.array(rw * acos_exact(ldot) + tw * et),
+            "dist": pa.array(dist),
         }
-        if carry:
-            for j, c in enumerate(QCOLS):
-                out[c] = pa.array(QR[qi, j])
-            for j, c in enumerate(TCOLS):
-                out[c] = pa.array(QT[qi, j])
-        return pa.table(out)
+        if admit is None:
+            return pa.table(out)
+        tables = [_with_nulls(out, _SE3_P1)]
+        part_key = left.column("part_key")[0].as_py()
+        if part_key >= 0 and part_key & salt_mask:
+            return tables[0]
+        # bound: the kth row's exact dist in (dist, pose_id) order
+        bound = np.full(left.num_rows, np.inf)
+        if len(qi) > 0:
+            o = np.lexsort((tie[idx], dist, qi))
+            qs = qi[o]
+            starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+            full = starts[np.diff(np.append(starts, len(qs))) >= k]
+            bound[qs[full]] = dist[o][full + k - 1]
+        bc, vmin, vspan = admit
+        leaf = left.column("key").to_numpy(zero_copy_only=False)
+        home = (
+            # home-edge early exit in COMPOUND units against the query's
+            # OWN leaf cell boundary (level-aware width)
+            tw * _grid_home_edge(QT, vmin, vspan, np.int64(1) << (leaf >> LVL_SHIFT)),
+            np.full(left.num_rows, part_key >> SALT_BITS if part_key >= 0 else -1),
+        )
+        QRc = QR * canon_sign_np(QR)[:, None]
+        for rows, pid in _se3_admit(bc.value, QT, QRc, bound, rw, tw, k, home):
+            tables.append(
+                _with_nulls(
+                    _se3_cand_cols(left.column("query_id"), rows, QR, QT, pid),
+                    _SE3_P1,
+                )
+            )
+        return pa.concat_tables(tables)
 
     return se3_group
 
@@ -1985,61 +1979,37 @@ def _se3_knn_on_index(
     trans_weight: float,
 ) -> DataFrame:
     spark, layout, corpus = index.spark, index.layout, index.corpus
-    leaf_expr = index.leaf_expr
     _release_registry(index._caches)
     rw, tw = float(rot_weight), float(trans_weight)
-    leaf_salts = _leaf_salts(spark, layout)
-    q = index._queries(queries)
-    leaf_pid = _leaf_pid(spark, layout)
 
     # ---- phase 1: home-partition probe (all salts) — TRUE compound bound
-    q_home = q.withColumn("key", F.expr(leaf_expr))
-    p1_cand = q_home.join(leaf_salts, "key").select(
-        "query_id", *QCOLS, *TCOLS, "part_key"
+    # and, from the same kernel, the phase-2 candidates.  A query whose
+    # home leaf is unoccupied goes to the synthetic part_key -1 - leaf key
+    # (no corpus row has a negative key) and gets count-bound candidates.
+    p1_cand = (
+        index._queries(queries)
+        .withColumn("key", F.expr(index.leaf_expr))
+        .join(_leaf_salts(spark, layout), "key", "left")
+        .withColumn("part_key", F.coalesce("part_key", -1 - F.col("key")))
     )
-    carry_schema = (
-        "query_id string, pose_id string, dist double, "
-        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
+    admit = (
+        _se3_bc(index),
+        np.array([lo for lo, _ in index.b3]),
+        np.array([span for _, span in index.b3]),
     )
     p1 = (
         p1_cand.groupby("part_key")
         .cogroup(corpus.groupby("part_key"))
-        .applyInArrow(_make_se3_group(k, rw, tw, carry=True), schema=carry_schema)
+        .applyInArrow(_make_se3_group(k, rw, tw, admit), schema=_ddl(_SE3_P1))
     )
-    p1_topk = _cached_p1_topk(p1, k, "pose_id", "dist", index._caches)
-    # the window is ordered by dist, so the rank == least(k, cnt) row's
-    # OWN dist IS max(dist) over the top-k — the extra max()-window pass
-    # was redundant (round-6)
-    bound_rows = (
-        p1_topk.filter(F.col("rank") == F.least(F.lit(k), F.col("cnt")))
-        .select(
-            "query_id", *QCOLS, *TCOLS,
-            F.when(F.col("cnt") >= k, F.col("dist"))
-            .otherwise(F.lit(float("inf")))
-            .alias("bound"),
-        )
-    )
-    absent = (
-        q_home.join(leaf_salts, "key", "left_anti")
-        .select("query_id", *QCOLS, *TCOLS, F.lit(float("inf")).alias("bound"))
-    )
-    q_b = (
-        bound_rows.unionByName(absent)
-        .withColumn("hk", F.expr(leaf_expr))
-        .join(
-            leaf_pid.withColumnRenamed("key", "hk").withColumnRenamed("pid", "home_pid"),
-            "hk", "left",
-        )
-        .fillna({"home_pid": -1})
-    )
+    p1_topk, cand = _p1_split(p1, k, "pose_id", "dist", index._caches)
 
-    # ---- phase 2: partition admission within the compound bound ---------
-    p2_cand = _se3_candidates(index, q_b, rw, tw, k)
+    # ---- phase 2: the candidate rows phase 1 emitted ---------------------
     # ONE builder job: the split planner's count collect fills both caches
     # + InSet probe pushdown AND splits heavy cogroups query-side
     p2_cand, p2 = _second_phase(
-        spark, p2_cand, corpus, layout.part_rows,
-        _make_se3_group(k, rw, tw, carry=False),
+        spark, _with_part_keys(index, cand), corpus, layout.part_rows,
+        _make_se3_group(k, rw, tw),
         "query_id string, pose_id string, dist double", index._caches,
         _KNN_SPLIT_TARGET,
     )
